@@ -20,20 +20,28 @@ from __future__ import annotations
 from typing import Iterable, Optional
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 
 from .diversity import kernel as K
-from .diversity.coreset import collect_coreset, mr_coreset
+from .diversity.coreset import collect_coreset, collect_sorted, mr_coreset
 from .diversity.gmm import gmm_distributed
 from .diversity.matroid import PartitionMatroid, TransversalMatroid  # noqa: F401
 from .streaming.coreset import fold_point
 
 
-def _collect_xy(df: DataFrame, id_col: str, vec_col: str):
-    rows = df.select(id_col, vec_col).orderBy(id_col).collect()
-    ids = np.array([r[id_col] for r in rows])
-    X = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    return ids, X
+def _selection(spark, ids, dist_when, id_col: str) -> DataFrame:
+    """The (sel_order, id, dist_when_chosen) result of a GMM run, built
+    from pandas: with Arrow on it plans as a LocalTableScan, which
+    collects without a Python-worker job."""
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "sel_order": np.arange(len(ids), dtype=np.int32),
+            id_col: np.asarray(ids, dtype=np.int64),
+            "dist_when_chosen": [round(float(d), 6) for d in dist_when],
+        }),
+        f"sel_order int, {id_col} bigint, dist_when_chosen double",
+    )
 
 
 def gmm(
@@ -51,17 +59,11 @@ def gmm(
     spark = df.sparkSession
     if distributed and metric == "euclidean":
         centers = gmm_distributed(df, k, id_col=id_col, vec_col=vec_col)
-        rows = [(r, i, round(float(d), 6)) for (r, i, d, _v) in centers]
-    else:
-        ids, X = _collect_xy(df, id_col, vec_col)
-        chosen, dist_when, _ = K.farthest_first(X, k, start=0, metric=metric)
-        rows = [
-            (rank, ids[c].item(), round(float(dist_when[rank]), 6))
-            for rank, c in enumerate(chosen)
-        ]
-    return spark.createDataFrame(
-        rows, f"sel_order int, {id_col} bigint, dist_when_chosen double"
-    )
+        _, ids, dist_when, _ = zip(*centers)
+        return _selection(spark, ids, dist_when, id_col)
+    ids, X = collect_sorted(df, id_col, vec_col)
+    chosen, dist_when, _ = K.farthest_first(X, k, start=0, metric=metric)
+    return _selection(spark, ids[chosen], dist_when, id_col)
 
 
 def gmm_coreset(
@@ -86,15 +88,9 @@ def gmm_coreset(
         (df[label_col] if label_col else df[id_col] % 1).cast("int").alias("label"),
     )
     cs = mr_coreset(sel, p=p, kprime=kprime or 4 * k, m=m, seed=seed)
-    ids, labels, X, w = collect_coreset(cs)
+    ids, _labels, X, _w = collect_coreset(cs)
     chosen, dist_when, _ = K.farthest_first(X, k, start=0, metric=metric)
-    rows = [
-        (rank, int(ids[c]), round(float(dist_when[rank]), 6))
-        for rank, c in enumerate(chosen)
-    ]
-    return spark.createDataFrame(
-        rows, f"sel_order int, {id_col} bigint, dist_when_chosen double"
-    )
+    return _selection(spark, ids[chosen], dist_when, id_col)
 
 
 def diversity(
@@ -108,7 +104,7 @@ def diversity(
     bipartition | tree | cycle) on a candidate set. Collects —
     candidate sets are small by construction (SURVEY.md §7
     known-hard #4)."""
-    _, X = _collect_xy(df, id_col, vec_col)
+    _, X = collect_sorted(df, id_col, vec_col)
     D = K.pairwise(X, metric)
     fn = {
         "edge": K.eval_edge,
@@ -130,7 +126,7 @@ def matching(
 ) -> DataFrame:
     """Remote-clique matching heuristic: k//2 mutually-far pairs."""
     spark = df.sparkSession
-    ids, X = _collect_xy(df, id_col, vec_col)
+    ids, X = collect_sorted(df, id_col, vec_col)
     sel = K.matching_heuristic(K.pairwise(X, metric), k)
     return spark.createDataFrame(
         [(i // 2, int(ids[s])) for i, s in enumerate(sel)],
@@ -152,11 +148,9 @@ def local_search(
     matroid constraint (PartitionMatroid over label_col values, or
     any object with is_independent)."""
     spark = df.sparkSession
-    cols = [id_col, vec_col] + ([label_col] if label_col else [])
-    rows = df.select(*cols).orderBy(id_col).collect()
-    ids = np.array([r[id_col] for r in rows])
-    X = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    labels = np.array([r[label_col] for r in rows]) if label_col else None
+    extra = [label_col] if label_col else []
+    ids, X, *labels = collect_sorted(df, id_col, vec_col, *extra)
+    labels = labels[0] if labels else None
     is_indep = None
     if matroid is not None:
         if labels is not None and isinstance(matroid, PartitionMatroid):

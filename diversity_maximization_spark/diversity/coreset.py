@@ -9,14 +9,18 @@ Plan shape (idiomatic Spark, no RDDs):
             size k' + up to m delegates per kernel point
          --> small DataFrame (p * k' * (m+1) rows) that either
              composes by union with other coresets or collects to the
-             driver for the sequential finish.
+             driver for the sequential finish: unsorted, in one Arrow
+             transfer, then sorted by vec_id on the driver
+             (collect_sorted), so the kernel stage runs exactly once.
 
 The partition key is a hash of the unique id, not repartition()'s
 round-robin: the coreset guarantee needs a random-like assignment
 that is ALSO reproducible across runs and cluster layouts
 (SURVEY.md §4.3). At 100 TB, p scales with cluster size and the
 shuffle moves each point once; the applyInPandas kernel is O(n_p·k')
-per partition in vectorized numpy.
+per partition in vectorized numpy: one distance pass per chosen
+center (kernel.farthest_first_clusters yields the nearest-center
+labels and distances alongside the traversal).
 """
 
 from __future__ import annotations
@@ -32,40 +36,68 @@ CORESET_SCHEMA = (
     "part int, vec_id bigint, label int, is_kernel int, center_rank int, "
     "dist_to_center double, weight bigint, embedding array<double>"
 )
+COLUMNS = [
+    "part", "vec_id", "label", "is_kernel", "center_rank",
+    "dist_to_center", "weight", "embedding",
+]
+
+
+def _points(pdf: pd.DataFrame) -> np.ndarray:
+    """A partition's embeddings as a float64 (n, d) matrix. A NaN or
+    ±inf coordinate would win farthest-first's argmax and poison every
+    distance, so it is rejected with the offending vec_id."""
+    X = np.stack(pdf["embedding"].map(np.asarray).to_numpy()).astype(np.float64)
+    bad = ~np.isfinite(X).all(axis=1)
+    if bad.any():
+        vid = int(pdf["vec_id"].iloc[int(np.argmax(bad))])
+        raise ValueError(f"non-finite embedding (NaN or inf) at vec_id {vid}")
+    return X
+
+
+def _coreset_frame(pdf, X, idx, is_kernel, rank, dist, weight) -> pd.DataFrame:
+    """Output rows for the partition points at positions `idx`."""
+    n = len(idx)
+    return pd.DataFrame({
+        "part": np.full(n, int(pdf["part"].iloc[0])),
+        "vec_id": pdf["vec_id"].to_numpy()[idx],
+        "label": pdf["label"].to_numpy()[idx],
+        "is_kernel": is_kernel,
+        "center_rank": rank,
+        "dist_to_center": dist,
+        "weight": weight,
+        "embedding": list(X[idx]),
+    }, columns=COLUMNS)
 
 
 def _partition_coreset(kprime: int, m: int):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = np.stack(pdf["embedding"].map(np.asarray).to_numpy()).astype(np.float64)
-        chosen, _, _ = K.farthest_first(X, kprime, start=0)
-        assign = K.assign_to_centers(X, chosen)
+        X = _points(pdf)
+        chosen, _, min_dist, label = K.farthest_first_clusters(X, kprime, start=0)
+        k = len(chosen)
+        # a center belongs to its own cluster (a duplicate of an earlier
+        # center is nearest to both), so it is never another's delegate
+        label[chosen] = np.arange(k)
         # weight = cluster size (delegate-weighted coreset)
-        counts = np.bincount(assign, minlength=len(chosen))
-        rows = []
-        part = int(pdf["part"].iloc[0])
-        for rank, c in enumerate(chosen):
-            dist_c = K.l2_to_point(X, X[c])
-            members = np.where((assign == rank) & (np.arange(len(X)) != c))[0]
-            taken = members[:m]  # deterministic: lowest vec_id delegates
-            # kernel weight = cluster members it represents (itself +
-            # non-exported members); exported delegates weigh 1 each,
-            # so each input point is accounted exactly once
-            rows.append(
-                (part, int(pdf["vec_id"].iloc[c]), int(pdf["label"].iloc[c]), 1,
-                 rank, 0.0, int(counts[rank]) - len(taken), list(map(float, X[c])))
-            )
-            for d in taken:
-                rows.append(
-                    (part, int(pdf["vec_id"].iloc[d]), int(pdf["label"].iloc[d]),
-                     0, rank, float(dist_c[d]), 1, list(map(float, X[d])))
-                )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "part", "vec_id", "label", "is_kernel", "center_rank",
-                "dist_to_center", "weight", "embedding",
-            ],
+        counts = np.bincount(label, minlength=k)
+        # delegates: each cluster's first m non-center members in
+        # vec_id order (deterministic: lowest vec_id delegates)
+        members = np.setdiff1d(np.arange(len(X)), chosen)
+        members = members[np.argsort(label[members], kind="stable")]
+        by_rank = label[members]
+        taken = members[np.arange(len(members)) - np.searchsorted(by_rank, by_rank) < m]
+        n_taken = np.bincount(label[taken], minlength=k)
+        # rows grouped by rank: the kernel point, then its delegates.
+        # Kernel weight = cluster members it represents (itself +
+        # non-exported members); exported delegates weigh 1 each, so
+        # each input point is accounted exactly once.
+        rank = np.concatenate([np.arange(k), label[taken]])
+        order = np.argsort(rank, kind="stable")
+        idx, rank, kernel = np.concatenate([chosen, taken])[order], rank[order], order < k
+        return _coreset_frame(
+            pdf, X, idx, kernel.astype(np.int64), rank,
+            np.where(kernel, 0.0, min_dist[idx]),
+            np.where(kernel, counts[rank] - n_taken[rank], 1),
         )
 
     return fn
@@ -110,19 +142,15 @@ ASSIGN_SCHEMA = (
 def _partition_assign(kprime: int):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = np.stack(pdf["embedding"].map(np.asarray).to_numpy()).astype(np.float64)
-        chosen, _, _ = K.farthest_first(X, kprime, start=0)
-        assign = K.assign_to_centers(X, chosen)
-        dists = np.array(
-            [K.l2_to_point(X[i : i + 1], X[chosen[assign[i]]])[0] for i in range(len(X))]
-        )
+        X = _points(pdf)
+        _, _, min_dist, label = K.farthest_first_clusters(X, kprime, start=0)
         return pd.DataFrame(
             {
                 "part": pdf["part"],
                 "vec_id": pdf["vec_id"],
                 "label": pdf["label"],
-                "center_rank": assign.astype(int),
-                "dist_to_center": dists,
+                "center_rank": label,
+                "dist_to_center": min_dist,
                 "embedding": pdf["embedding"],
             }
         )
@@ -142,15 +170,31 @@ def cluster_assignments(
     )
 
 
+def collect_sorted(df: DataFrame, key: str, vec_col: str, *cols: str):
+    """The driver boundary: one Arrow transfer of the `key`, `vec_col`
+    and `cols` columns, ordered by `key` on the driver with a stable
+    argsort. A Spark orderBy would range-partition first, and the
+    range partitioner's sampling job re-executes the whole upstream
+    plan (for a coreset: the pandas kernel stage). Returns
+    (keys, X, *cols) as numpy arrays; X is the (n, d) float64 matrix
+    of the array column `vec_col`."""
+    t = df.select(key, vec_col, *cols).toArrow()
+    keys = t.column(key).to_numpy()
+    order = np.argsort(keys, kind="stable")
+    vec = t.column(vec_col).combine_chunks()
+    lengths = vec.value_lengths().to_numpy(zero_copy_only=False)
+    if vec.null_count or (lengths != lengths[:1]).any():
+        raise ValueError(f"{vec_col} must hold equal-length, non-NULL arrays")
+    flat = vec.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    X = flat.reshape(len(vec), lengths[0] if len(vec) else 0)
+    return (keys[order], X[order], *(t.column(c).to_numpy()[order] for c in cols))
+
+
 def collect_coreset(coreset_df: DataFrame):
     """Compose (union is implicit — one DataFrame) and materialize the
     coreset on the driver for the sequential finish: returns
     (ids, labels, X, weights) sorted by vec_id."""
-    rows = coreset_df.orderBy("vec_id").collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    labels = np.array([r["label"] for r in rows])
-    X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    w = np.array([r["weight"] for r in rows])
+    ids, X, labels, w = collect_sorted(coreset_df, "vec_id", "embedding", "label", "weight")
     return ids, labels, X, w
 
 
@@ -163,35 +207,14 @@ def _weighted_partition_coreset(kprime: int):
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = np.stack(pdf["embedding"].map(np.asarray).to_numpy()).astype(
-            np.float64
-        )
-        chosen, _, _ = K.farthest_first(X, kprime, start=0)
-        assign = K.assign_to_centers(X, chosen)
-        w_in = pdf["weight"].to_numpy()
-        w_out = np.zeros(len(chosen), dtype=np.int64)
-        for i, a in enumerate(assign):
-            w_out[a] += w_in[i]
-        rows = []
-        for rank, idx in enumerate(chosen):
-            rows.append(
-                (
-                    int(pdf["part"].iloc[0]),
-                    int(pdf["vec_id"].iloc[idx]),
-                    int(pdf["label"].iloc[idx]),
-                    1,
-                    rank,
-                    0.0,
-                    int(w_out[rank]),
-                    list(map(float, X[idx])),
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "part", "vec_id", "label", "is_kernel", "center_rank",
-                "dist_to_center", "weight", "embedding",
-            ],
+        X = _points(pdf)
+        chosen, _, _, label = K.farthest_first_clusters(X, kprime, start=0)
+        k = len(chosen)
+        w_out = np.zeros(k, dtype=np.int64)
+        np.add.at(w_out, label, pdf["weight"].to_numpy().astype(np.int64))
+        return _coreset_frame(
+            pdf, X, chosen, np.ones(k, dtype=np.int64), np.arange(k),
+            np.zeros(k), w_out,
         )
 
     return fn

@@ -70,21 +70,31 @@ def dist_to_point(X: np.ndarray, c: np.ndarray, metric: str = "euclidean"):
     raise ValueError(f"unknown metric: {metric}")
 
 
-def farthest_first(X: np.ndarray, k: int, start: int = 0, metric: str = "euclidean"):
+def farthest_first_clusters(
+    X: np.ndarray, k: int, start: int = 0, metric: str = "euclidean"
+):
     """Gonzalez farthest-first traversal (GMM), 2-approx for
-    remote-edge [SURVEY.md §2.1 / PAPER-VLDB17 §2].
+    remote-edge [SURVEY.md §2.1 / PAPER-VLDB17 §2], that also clusters
+    every point around the chosen centers in the same distance passes.
 
-    Returns (chosen_indices, dist_when_chosen, min_dist_per_point):
-    chosen[0] = start; each next point maximizes distance to the
-    chosen set; ties broken by lowest index. `metric` is euclidean or
-    cosine (the reference's two distance families).
+    Returns (chosen, dist_when, min_dist, label): chosen[0] = start;
+    each next point maximizes distance to the chosen set, ties broken
+    by lowest index; dist_when[r] is chosen[r]'s distance to the set
+    when it was picked; min_dist[i] is point i's distance to its
+    nearest center and label[i] that center's rank. One distance pass
+    per center: label moves to a new center only on a strictly
+    smaller distance, so on ties the earlier center wins — exactly
+    np.argmin over the full (n, k) center-distance matrix, and
+    min_dist equals its row minimum bit for bit. `metric` is
+    euclidean or cosine (the reference's two distance families).
     """
     n = len(X)
     k = min(k, n)
     chosen = [start]
     dist_when = [0.0]
     min_dist = dist_to_point(X, X[start], metric)
-    for _ in range(1, k):
+    label = np.zeros(n, dtype=np.int64)
+    for rank in range(1, k):
         # argmax with lowest-index tie-break (np.argmax returns first
         # max); chosen points are masked out so duplicate points (all
         # remaining distances 0) never re-select a chosen index
@@ -93,14 +103,17 @@ def farthest_first(X: np.ndarray, k: int, start: int = 0, metric: str = "euclide
         idx = int(np.argmax(masked))
         chosen.append(idx)
         dist_when.append(float(min_dist[idx]))
-        np.minimum(min_dist, dist_to_point(X, X[idx], metric), out=min_dist)
-    return np.array(chosen), np.array(dist_when), min_dist
+        d = dist_to_point(X, X[idx], metric)
+        label[d < min_dist] = rank
+        np.minimum(min_dist, d, out=min_dist)
+    return np.array(chosen), np.array(dist_when), min_dist, label
 
 
-def assign_to_centers(X: np.ndarray, centers_idx: np.ndarray) -> np.ndarray:
-    """Nearest-center assignment (ties -> earlier center)."""
-    D = np.stack([l2_to_point(X, X[c]) for c in centers_idx], axis=1)
-    return np.argmin(D, axis=1)
+def farthest_first(X: np.ndarray, k: int, start: int = 0, metric: str = "euclidean"):
+    """farthest_first_clusters without the labels: returns
+    (chosen_indices, dist_when_chosen, min_dist_per_point)."""
+    chosen, dist_when, min_dist, _ = farthest_first_clusters(X, k, start, metric)
+    return chosen, dist_when, min_dist
 
 
 def eval_edge(D: np.ndarray) -> float:
