@@ -13,6 +13,18 @@ snapshot.
 At scale this runs per shard key (groupBy(shard)) to parallelize, and
 the per-shard coresets compose by union + re-merge — the same
 composability the MapReduce variant exploits.
+
+Micro-batches. The handlers fold each key's points in global vec_id
+order and the replay files are vec_id-ordered ranges, so the final
+state does not depend on where the batch boundaries fall. Every
+micro-batch costs a fixed commit and dispatch overhead, so keys that
+only read the final state (div_coreset_stream_sharded and its shard
+census, div_coreset_stream_matroid) read the whole replay as one
+micro-batch. Keys whose declared output is the per-batch snapshots
+read one file per micro-batch: div_coreset_stream and
+stream_coreset_census (one snapshot per replay slice), and
+stream_coreset_matroid_census (its hash covers the state carried
+across the 4 batch boundaries).
 """
 
 from __future__ import annotations
@@ -21,8 +33,8 @@ import json
 import math
 import os
 import shutil
-import tempfile
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,9 +48,11 @@ from .replay import stream_conf
 KPRIME = 16
 
 OUTPUT_SCHEMA = (
-    "shard int, seq int, rank int, vec_id bigint, weight bigint, tau double"
+    "shard int, seq int, rank int, vec_id bigint, weight bigint, tau double, "
+    "embedding array<double>"
 )
 STATE_SCHEMA = "seq int, payload string"
+REPLAY_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 
 
 def _dist(a, b) -> float:
@@ -90,43 +104,84 @@ def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
     state["centers"] = centers
 
 
+def _in_vec_id_order(pdf_iter) -> pd.DataFrame:
+    """One key's rows of a micro-batch, sorted by vec_id. Arrow hands
+    them over in chunks of at most
+    spark.sql.execution.arrow.maxRecordsPerBatch rows, so the chunks
+    are joined before the sort: sorting each chunk alone folds in
+    chunk order once a key's batch spans several chunks."""
+    return pd.concat(list(pdf_iter), ignore_index=True).sort_values("vec_id")
+
+
 def _handler(key, pdf_iter, state: GroupState):
     if state.exists:
         seq, payload = state.get
         st = json.loads(payload)
     else:
         seq, st = 0, {"tau": 0.0, "centers": []}
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("vec_id")
-        for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-            fold_point(st, int(vid), [float(x) for x in vec])
+    pdf = _in_vec_id_order(pdf_iter)
+    for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
+        fold_point(st, int(vid), [float(x) for x in vec])
     seq += 1
     state.update((seq, json.dumps(st)))
+    # each center's vector rides along, so composing the shards needs
+    # no second scan of the embeddings
     yield pd.DataFrame(
         [
-            (int(key[0]), seq, rank, c[0], c[2], st["tau"])
+            (int(key[0]), seq, rank, c[0], c[2], st["tau"], c[1])
             for rank, c in enumerate(st["centers"])
         ],
-        columns=["shard", "seq", "rank", "vec_id", "weight", "tau"],
+        columns=["shard", "seq", "rank", "vec_id", "weight", "tau", "embedding"],
     )
 
 
-# one embedding-replay dir per (sf_dir, n_slices) per process (same
-# rationale as replay._REPLAY_CACHE: the slices are deterministic)
-_EMB_REPLAY_CACHE: dict[tuple[str, int], str] = {}
+def _fold_stream(
+    spark: SparkSession,
+    replay: str,
+    key: F.Column,
+    cols: list,
+    handler,
+    schema: str,
+    name: str,
+    files_per_trigger: int | None,
+) -> DataFrame:
+    """Stream the replay dir through ``handler`` with one state key per
+    value of ``key`` and return the memory table of every snapshot it
+    emitted. ``files_per_trigger=None`` reads the whole replay as one
+    micro-batch (availableNow with no file cap)."""
+    from .windows import _fresh
+
+    reader = spark.readStream.schema(REPLAY_SCHEMA)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    snap = (
+        reader.parquet(replay)
+        .select(key.alias("g"), *cols)
+        .groupBy("g")
+        .applyInPandasWithState(
+            handler, schema, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
+        )
+    )
+    name = _fresh(name)
+    with stream_conf(spark):
+        q = (
+            snap.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.table(name)
 
 
-def embedding_replay(spark: SparkSession, sf_dir: str, n_slices: int = 4) -> str:
-    """Write embeddings as n_slices vec_id-ordered parquet files,
-    replayed with maxFilesPerTrigger=1 for deterministic micro-batch
-    boundaries; returns the directory (cached per process)."""
-    key = (sf_dir, n_slices)
-    if key in _EMB_REPLAY_CACHE:
-        return _EMB_REPLAY_CACHE[key]
-    emb = load(spark, sf_dir, "embeddings")
+def _write_slices(emb: DataFrame, n_slices: int, prefix: str) -> str:
+    """Write ``emb`` as n_slices vec_id-ordered parquet files, slice i
+    holding vec_id in [i*per, (i+1)*per) with per = n // n_slices and
+    the last slice taking the tail; returns the directory."""
     n = emb.count()
     per = max(1, n // n_slices)
-    replay = scratch_dir(prefix="dms_score_")
+    replay = scratch_dir(prefix=prefix)
     for i in range(n_slices):
         lo, hi = i * per, (i + 1) * per if i < n_slices - 1 else n
         part = emb.filter(
@@ -139,6 +194,23 @@ def embedding_replay(spark: SparkSession, sf_dir: str, n_slices: int = 4) -> str
         f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
         shutil.copy(os.path.join(d, f), os.path.join(replay, f"{i:04d}.parquet"))
         shutil.rmtree(d, ignore_errors=True)
+    return replay
+
+
+# one embedding-replay dir per (sf_dir, n_slices) per process (same
+# rationale as replay._REPLAY_CACHE: the slices are deterministic)
+_EMB_REPLAY_CACHE: dict[tuple[str, int], str] = {}
+
+
+def embedding_replay(spark: SparkSession, sf_dir: str, n_slices: int = 4) -> str:
+    """Write embeddings as n_slices vec_id-ordered parquet files (so
+    one file per trigger gives deterministic micro-batch boundaries);
+    returns the directory (cached per process)."""
+    key = (sf_dir, n_slices)
+    if key in _EMB_REPLAY_CACHE:
+        return _EMB_REPLAY_CACHE[key]
+    emb = load(spark, sf_dir, "embeddings")
+    replay = _write_slices(emb, n_slices, "dms_score_")
     _EMB_REPLAY_CACHE[key] = replay
     return replay
 
@@ -147,40 +219,19 @@ def streaming_coreset_snapshots(
     spark: SparkSession, sf_dir: str, n_slices: int = 4
 ) -> DataFrame:
     """All per-micro-batch snapshots (shard, seq, rank, vec_id,
-    weight, tau) of the serial streaming coreset — one snapshot per
-    replayed file. The final-seq slice is the coreset; the full table
-    is what the census key audits batch by batch."""
-    replay = embedding_replay(spark, sf_dir, n_slices)
-
-    st = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+    weight, tau, embedding) of the serial streaming coreset — one
+    snapshot per replayed file. The final-seq slice is the coreset;
+    the full table is what the census key audits batch by batch."""
+    return _fold_stream(
+        spark,
+        embedding_replay(spark, sf_dir, n_slices),
+        F.lit(0),
+        ["vec_id", "embedding"],
+        _handler,
+        OUTPUT_SCHEMA,
+        "score",
+        files_per_trigger=1,
     )
-    from .windows import _fresh
-
-    snap = (
-        st.select(F.lit(0).alias("g"), "vec_id", "embedding")
-        .groupBy("g")
-        .applyInPandasWithState(
-            _handler,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-    name = _fresh("score")
-    with stream_conf(spark):
-        q = (
-            snap.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def streaming_coreset(spark: SparkSession, sf_dir: str, n_slices: int = 4) -> DataFrame:
@@ -233,43 +284,19 @@ def _duck_shard_mix(col: str = "vec_id", n_shards: int = 4) -> str:
 def streaming_coreset_sharded_snapshots(
     spark: SparkSession, sf_dir: str, n_shards: int = 4, n_slices: int = 4
 ) -> DataFrame:
-    """All per-micro-batch snapshots of the sharded streaming coreset
-    (one state key per shard, shard = the portable Knuth mix)."""
-    replay = embedding_replay(spark, sf_dir, n_slices)
-
-    st = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+    """All snapshots of the sharded streaming coreset (one state key
+    per shard, shard = the portable Knuth mix). The replay is read as
+    one micro-batch, so each shard emits one snapshot, seq 1."""
+    return _fold_stream(
+        spark,
+        embedding_replay(spark, sf_dir, n_slices),
+        shard_mix("vec_id", n_shards),
+        ["vec_id", "embedding"],
+        _handler,
+        OUTPUT_SCHEMA,
+        "scoreshard",
+        files_per_trigger=None,
     )
-    from .windows import _fresh
-
-    snap = (
-        st.select(
-            shard_mix("vec_id", n_shards).alias("g"),
-            "vec_id",
-            "embedding",
-        )
-        .groupBy("g")
-        .applyInPandasWithState(
-            _handler,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-    name = _fresh("scoreshard")
-    with stream_conf(spark):
-        q = (
-            snap.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def streaming_coreset_sharded(
@@ -285,48 +312,31 @@ def streaming_coreset_sharded(
     shard across executors, and only the tiny per-shard summaries meet
     at the end. Shard key is the PORTABLE Knuth mix (shard_mix) so the
     per-shard census is hash-checkable in DuckDB."""
-    emb = load(spark, sf_dir, "embeddings")
-    all_snaps = streaming_coreset_sharded_snapshots(
-        spark, sf_dir, n_shards, n_slices
-    )
+    snaps = streaming_coreset_sharded_snapshots(spark, sf_dir, n_shards, n_slices)
+    rows = snaps.select("shard", "seq", "vec_id", "weight", "tau", "embedding").collect()
 
     # final snapshot per shard (seq counts per key, so max per shard)
-    from pyspark.sql.window import Window
-
-    latest = (
-        all_snaps.withColumn(
-            "is_last",
-            F.col("seq")
-            == F.max("seq").over(Window.partitionBy("shard")),
-        )
-        .filter("is_last")
-        .select("shard", "vec_id", "weight")
-    )
-    rows = latest.collect()
+    last = {}
+    for r in rows:
+        last[r["shard"]] = max(last.get(r["shard"], 0), r["seq"])
+    final = [r for r in rows if r["seq"] == last[r["shard"]]]
 
     # compose: union the per-shard weighted centers, re-fold with
     # weights carried — tau starts at the max shard tau so the merged
     # summary keeps the separation invariant
-    shard_taus = {
-        r["shard"]: r["tau"]
-        for r in all_snaps.groupBy("shard")
-        .agg(F.max_by("tau", "seq").alias("tau"))
-        .collect()
-    }
-    vec_of = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in emb.filter(
-            F.col("vec_id").isin([r["vec_id"] for r in rows])
-        ).collect()
-    }
-    merged = {"tau": max(shard_taus.values(), default=0.0), "centers": []}
-    for r in sorted(rows, key=lambda r: (r["vec_id"],)):
-        fold_point(merged, int(r["vec_id"]), vec_of[r["vec_id"]], int(r["weight"]))
+    merged = {"tau": max((r["tau"] for r in final), default=0.0), "centers": []}
+    for r in sorted(final, key=lambda r: r["vec_id"]):
+        fold_point(merged, int(r["vec_id"]), list(r["embedding"]), int(r["weight"]))
+    centers = merged["centers"]
+    # a typed pandas frame plans as a LocalTableScan: collecting the
+    # result needs no Python-worker job
     return spark.createDataFrame(
-        [
-            (rank, c[0], c[2], round(merged["tau"], 6))
-            for rank, c in enumerate(merged["centers"])
-        ],
+        pd.DataFrame({
+            "rank": np.arange(len(centers), dtype=np.int32),
+            "vec_id": np.array([c[0] for c in centers], dtype=np.int64),
+            "weight": np.array([c[2] for c in centers], dtype=np.int64),
+            "tau": np.full(len(centers), round(merged["tau"], 6)),
+        }),
         "rank int, vec_id bigint, weight bigint, tau double",
     )
 
@@ -411,129 +421,6 @@ def stream_coreset_shard_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class _CoresetProcessor:
-    """StatefulProcessor for the doubling coreset — the PySpark 4.x
-    transformWithStateInPandas form of the same algorithm (ValueState
-    holds (seq, payload); fold shared with the applyInPandasWithState
-    path, so the two operators must produce identical summaries)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("summary", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._state.exists():
-            seq, payload = self._state.get()
-            st = json.loads(payload)
-        else:
-            seq, st = 0, {"tau": 0.0, "centers": []}
-        for pdf in rows:
-            pdf = pdf.sort_values("vec_id")
-            for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-                fold_point(st, int(vid), [float(x) for x in vec])
-        seq += 1
-        self._state.update((seq, json.dumps(st)))
-        yield pd.DataFrame(
-            [
-                (int(key[0]), seq, rank, c[0], c[2], st["tau"])
-                for rank, c in enumerate(st["centers"])
-            ],
-            columns=["shard", "seq", "rank", "vec_id", "weight", "tau"],
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas runs a protobuf-based state-server
-    worker; this container's google.protobuf is broken (ImportError:
-    cannot import 'descriptor'), which crashes the runner at stream
-    start. Gate the key on a working protobuf so environments that
-    have it get the modern-API variant and this one skips it."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def div_coreset_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doubling coreset via transformWithStateInPandas (the current
-    stateful API; needs the RocksDB state store provider). Shares
-    fold_point with div_coreset_stream — equality tested."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type("CoresetProcessor", (_CoresetProcessor, StatefulProcessor), {})
-
-    emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    n_slices = 4
-    per = max(1, n // n_slices)
-    replay = scratch_dir(prefix="dms_tws_")
-    for i in range(n_slices):
-        lo, hi = i * per, (i + 1) * per if i < n_slices - 1 else n
-        part = emb.filter(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-            if i < n_slices - 1
-            else (F.col("vec_id") >= lo)
-        )
-        d = scratch_dir("dms_slice_")
-        part.orderBy("vec_id").coalesce(1).write.mode("overwrite").parquet(d)
-        f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-        shutil.copy(os.path.join(d, f), os.path.join(replay, f"{i:04d}.parquet"))
-        shutil.rmtree(d, ignore_errors=True)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        st = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-        )
-        from .windows import _fresh
-
-        snap = (
-            st.select(F.lit(0).alias("g"), "vec_id", "embedding")
-            .groupBy("g")
-            .transformWithStateInPandas(
-                statefulProcessor=cls(),
-                outputStructType=OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-        name = _fresh("tws")
-        with stream_conf(spark):
-            q = (
-                snap.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
-    all_snaps = spark.table(name)
-    last = all_snaps.agg(F.max("seq")).collect()[0][0]
-    return all_snaps.filter(F.col("seq") == last).select(
-        "rank", "vec_id", "weight", F.round("tau", 6).alias("tau")
-    )
-
-
-if _tws_available():  # pragma: no cover — protobuf broken in this env
-    query("div_coreset_stream_tws")(div_coreset_stream_tws)
-
-
 # --- matroid-aware streaming coreset (KDD18 / TKDD20 line) ----------------
 
 MATROID_CAP = 1  # capacity per label (partition matroid)
@@ -611,14 +498,11 @@ def _matroid_handler_factory(cap: int):
             st = json.loads(payload)
         else:
             seq, st = 0, {"tau": 0.0, "centers": []}
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("vec_id")
-            for vid, vec, lab in zip(
-                pdf["vec_id"], pdf["embedding"], pdf["label"]
-            ):
-                fold_matroid_point(
-                    st, int(vid), [float(x) for x in vec], int(lab), cap=cap
-                )
+        pdf = _in_vec_id_order(pdf_iter)
+        for vid, vec, lab in zip(pdf["vec_id"], pdf["embedding"], pdf["label"]):
+            fold_matroid_point(
+                st, int(vid), [float(x) for x in vec], int(lab), cap=cap
+            )
         seq += 1
         state.update((seq, json.dumps(st)))
         rows = []
@@ -652,40 +536,20 @@ def div_coreset_stream_matroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     finish (greedy init + constrained local search, the same driver
     code path as div_matroid_partition) runs on the tiny summary.
     Returns the selected independent set (vec_id, label)."""
-    import numpy as np
-
     from ..diversity import kernel as K
     from ..diversity.matroid import PartitionMatroid
-    from .windows import _fresh
 
-    replay = embedding_replay(spark, sf_dir)
-    st = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+    # only the final snapshot is read, so the replay is one micro-batch
+    all_snaps = _fold_stream(
+        spark,
+        embedding_replay(spark, sf_dir),
+        F.lit(0),
+        ["vec_id", "embedding", "label"],
+        _matroid_handler,
+        MATROID_OUTPUT_SCHEMA,
+        "scorematroid",
+        files_per_trigger=None,
     )
-    snap = (
-        st.select(F.lit(0).alias("g"), "vec_id", "embedding", "label")
-        .groupBy("g")
-        .applyInPandasWithState(
-            _matroid_handler,
-            MATROID_OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-    name = _fresh("scorematroid")
-    with stream_conf(spark):
-        q = (
-            snap.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    all_snaps = spark.table(name)
     last = all_snaps.agg(F.max("seq")).collect()[0][0]
     summary = (
         all_snaps.filter(F.col("seq") == last)
@@ -761,21 +625,7 @@ def _matroid_census_replay(
         ).alias("embedding"),
         "label",
     )
-    n = emb.count()
-    per = max(1, n // n_slices)
-    replay = scratch_dir(prefix="dms_mcensus_")
-    for i in range(n_slices):
-        lo, hi = i * per, (i + 1) * per if i < n_slices - 1 else n
-        part = emb.filter(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-            if i < n_slices - 1
-            else (F.col("vec_id") >= lo)
-        )
-        d = scratch_dir("dms_mslice_")
-        part.orderBy("vec_id").coalesce(1).write.mode("overwrite").parquet(d)
-        f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-        shutil.copy(os.path.join(d, f), os.path.join(replay, f"{i:04d}.parquet"))
-        shutil.rmtree(d, ignore_errors=True)
+    replay = _write_slices(emb, n_slices, "dms_mcensus_")
     _MATROID_CENSUS_REPLAY_CACHE[key] = replay
     return replay
 
@@ -844,38 +694,16 @@ def stream_coreset_matroid_census(
     (stream_coreset_census / _shard_census) and the center-geometry
     golden, every arithmetic path of the streaming-coreset family is
     now either driver-hash-gated or golden-pinned."""
-    from .windows import _fresh
-
-    replay = _matroid_census_replay(spark, sf_dir)
-    st = (
-        spark.readStream.schema(
-            "vec_id bigint, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
+    all_snaps = _fold_stream(
+        spark,
+        _matroid_census_replay(spark, sf_dir),
+        F.lit(0),
+        ["vec_id", "embedding", "label"],
+        _matroid_handler_factory(MATROID_CENSUS_CAP),
+        MATROID_OUTPUT_SCHEMA,
+        "mcensus",
+        files_per_trigger=1,
     )
-    snap = (
-        st.select(F.lit(0).alias("g"), "vec_id", "embedding", "label")
-        .groupBy("g")
-        .applyInPandasWithState(
-            _matroid_handler_factory(MATROID_CENSUS_CAP),
-            MATROID_OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-    name = _fresh("mcensus")
-    with stream_conf(spark):
-        q = (
-            snap.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    all_snaps = spark.table(name)
     last = all_snaps.agg(F.max("seq")).collect()[0][0]
     return (
         all_snaps.filter(F.col("seq") == last)

@@ -153,7 +153,7 @@ def write_replay_files_with_flush(
 
 
 def stream_events(
-    spark: SparkSession, replay_dir: str, files_per_trigger: int = 2
+    spark: SparkSession, replay_dir: str, files_per_trigger: int | None = None
 ) -> DataFrame:
     """Watermarks require TIMESTAMP (ltz); session tz is pinned to UTC
     here (runtime-settable conf — the driver constructs its own
@@ -162,7 +162,7 @@ def stream_events(
 
     ``files_per_trigger`` sets how many replay files each micro-batch
     consumes. Boundaries stay deterministic (files are mtime-ordered;
-    batch k = files [k*f, (k+1)*f)). The default is 2 (guide §2.2 —
+    batch k = files [k*f, (k+1)*f)). The default (None) is 2 (guide §2.2 —
     every micro-batch pays a fixed WAL-commit + offset-log + listing +
     per-partition state-store-commit overhead, measured at 130-160 ms
     plus an addBatch floor per batch at sf0.01, so halving the batch
@@ -175,18 +175,17 @@ def stream_events(
     of slices that already replay in global (ts, event_id) order folds
     in the same order. Keys whose semantics pin the batch boundary
     (sentinel-flush outer joins) pass ``files_per_trigger=1``
-    explicitly; the streaming-coreset replay (separate reader in
-    streaming/coreset.py) keeps 1 file per trigger because its
-    per-batch snapshots ARE the declared output.
+    explicitly. The streaming-coreset replay has its own reader
+    (streaming/coreset.py): keys whose declared output is the
+    per-batch snapshots keep 1 file per trigger, and keys that read
+    only the final state take the whole replay in one micro-batch.
 
     ``SPARK_GRAFT_REPLAY_FPT`` overrides the DEFAULT only (deployment
-    knob, same pattern as SPARK_GRAFT_STREAM_SHUFFLE); explicit
-    ``files_per_trigger=1`` call sites are semantic and never
-    overridden."""
-    if files_per_trigger != 1:
+    knob, same pattern as SPARK_GRAFT_STREAM_SHUFFLE); a value the
+    caller passes is never overridden."""
+    if files_per_trigger is None:
         env = os.environ.get("SPARK_GRAFT_REPLAY_FPT")
-        if env:
-            files_per_trigger = max(1, int(env))
+        files_per_trigger = max(1, int(env)) if env else 2
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return (
         spark.readStream.schema(EVENT_SCHEMA)

@@ -200,7 +200,7 @@ def test_clustered_layout_pushes_range_filter(spark, sf_dir):
     assert "l_shipdate" in pushed, plan
 
 
-def test_ntile_has_no_global_window(spark, sf_dir):
+def test_ntile_has_no_global_window(spark, sf_dir, monkeypatch):
     """The scale-safe NTILE plan must contain NO Window node at all
     (the global quartiles come from the distributed row-number map).
     Asserted at the KEY level with checkpointing forced off via
@@ -209,17 +209,12 @@ def test_ntile_has_no_global_window(spark, sf_dir):
     boundary and the assertion was near-vacuous), so the whole
     per-key pipeline — pre-processing included — is visible to the
     Window/MapInPandas checks."""
-    import os
-
-    os.environ["SPARK_GRAFT_GR_CHECKPOINT"] = "0"
-    try:
-        for key in ("win_ntile_pctrank", "feat_bucketize"):
-            plan = plan_of(spark, key, sf_dir)
-            assert "Window" not in plan, key
-            assert "MapInPandas" in plan, key
-            assert "ExistingRDD" not in plan, key  # truncation really off
-    finally:
-        os.environ.pop("SPARK_GRAFT_GR_CHECKPOINT", None)
+    monkeypatch.setenv("SPARK_GRAFT_GR_CHECKPOINT", "0")
+    for key in ("win_ntile_pctrank", "feat_bucketize"):
+        plan = plan_of(spark, key, sf_dir)
+        assert "Window" not in plan, key
+        assert "MapInPandas" in plan, key
+        assert "ExistingRDD" not in plan, key  # truncation really off
 
 
 def test_global_rank_pipeline_shape(spark, sf_dir):

@@ -20,6 +20,12 @@ def emb_rows(spark, sf_dir):
     )
 
 
+@pytest.fixture(scope="module")
+def sharded_rows(spark, sf_dir):
+    """The sharded key's answer, with the default Arrow chunk size."""
+    return QUERIES["div_coreset_stream_sharded"](spark, sf_dir).collect()
+
+
 def _batch_fold(rows):
     st = {"tau": 0.0, "centers": []}
     for r in rows:
@@ -88,11 +94,11 @@ def test_session_window_matches_gap_sessionize(spark, sf_dir):
     assert n_key == m_key
 
 
-def test_sharded_stream_coreset_composes(spark, sf_dir, emb_rows):
+def test_sharded_stream_coreset_composes(emb_rows, sharded_rows):
     """Parallel per-shard stateful coresets + weighted re-fold must
     yield one valid summary: <= k' centers, weights partition the
     input, centers pairwise-separated by the merged tau."""
-    rows = QUERIES["div_coreset_stream_sharded"](spark, sf_dir).collect()
+    rows = sharded_rows
     assert 1 <= len(rows) <= KPRIME
     assert sum(r["weight"] for r in rows) == len(emb_rows)
     tau = rows[0]["tau"]
@@ -124,7 +130,9 @@ def test_stream_sinks_equal_batch(spark, sf_dir):
         assert got == batch, key
 
 
-def test_sharded_coreset_within_doubling_bound_of_serial(spark, sf_dir):
+def test_sharded_coreset_within_doubling_bound_of_serial(
+    spark, sf_dir, sharded_rows
+):
     """VERDICT r01 item 7: composing the per-shard coresets must land
     within the doubling bound of the single-key (paper-serial)
     summary — sharding can advance tau only by bounded extra doublings
@@ -132,7 +140,7 @@ def test_sharded_coreset_within_doubling_bound_of_serial(spark, sf_dir):
     coverage. Both taus are > 0 on the fixture and their ratio is
     bounded by a small power of 2."""
     serial = QUERIES["div_coreset_stream"](spark, sf_dir).collect()
-    sharded = QUERIES["div_coreset_stream_sharded"](spark, sf_dir).collect()
+    sharded = sharded_rows
     t_serial = serial[0]["tau"]
     t_sharded = sharded[0]["tau"]
     assert t_serial > 0 and t_sharded > 0
@@ -167,30 +175,6 @@ def test_matroid_stream_coreset_independent_selection(spark, sf_dir):
     for c in st["centers"]:
         for dl in c[3].values():
             assert len(dl) <= 2
-
-
-def test_tws_gate_honest_both_ways(spark, sf_dir):
-    """The transformWithStateInPandas gate must track reality: when
-    google.protobuf works, the modern-API key MUST be registered and
-    must reproduce the legacy applyInPandasWithState coreset (shared
-    fold_point); when protobuf is broken, the key must be absent AND
-    the import must actually fail — a stale always-False gate would
-    silently keep a fixed environment on the legacy path."""
-    from diversity_maximization_spark.streaming.coreset import _tws_available
-
-    if _tws_available():
-        assert "div_coreset_stream_tws" in QUERIES
-        tws = sorted(
-            map(tuple, QUERIES["div_coreset_stream_tws"](spark, sf_dir).collect())
-        )
-        legacy = sorted(
-            map(tuple, QUERIES["div_coreset_stream"](spark, sf_dir).collect())
-        )
-        assert tws == legacy
-    else:
-        assert "div_coreset_stream_tws" not in QUERIES
-        with pytest.raises(ImportError):
-            from google.protobuf import descriptor  # noqa: F401
 
 
 def test_stream_stream_left_join_flush_semantics(spark, sf_dir):
@@ -261,3 +245,125 @@ def test_stream_coreset_center_geometry_golden(spark, sf_dir):
         (290, 28),
     ], got
     assert all(abs(r["tau"] - 1.420371) < 5e-7 for r in rows), rows[0]["tau"]
+
+
+@pytest.fixture
+def small_arrow_chunks(spark):
+    """Hand each stateful handler its rows in Arrow chunks of 64, so
+    every key's micro-batch spans several chunks."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "64")
+    yield
+    if saved is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, saved)
+
+
+def test_stream_coreset_fold_order_ignores_arrow_chunks(
+    spark, sf_dir, emb_rows, sharded_rows, small_arrow_chunks
+):
+    """The fold runs in vec_id order however Arrow chunks a key's
+    micro-batch: the serial key still equals the sequential fold and
+    the sharded key its default-chunk answer."""
+    got = {
+        r["vec_id"]: r["weight"]
+        for r in QUERIES["div_coreset_stream"](spark, sf_dir).collect()
+    }
+    assert got == {c[0]: c[2] for c in _batch_fold(emb_rows)["centers"]}
+    sharded = QUERIES["div_coreset_stream_sharded"](spark, sf_dir).collect()
+    assert sorted(map(tuple, sharded)) == sorted(map(tuple, sharded_rows))
+
+
+class _State:
+    """The part of GroupState the coreset handlers use."""
+
+    exists = False
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+
+def test_handler_sorts_across_chunks(emb_rows):
+    """Chunks that arrive out of vec_id order (as a shuffle read can
+    deliver them) still fold in global vec_id order."""
+    import pandas as pd
+
+    from diversity_maximization_spark.streaming.coreset import _handler
+
+    pdf = pd.DataFrame(
+        {
+            "vec_id": [r["vec_id"] for r in emb_rows],
+            "embedding": [list(r["embedding"]) for r in emb_rows],
+        }
+    )
+    chunks = [pdf.iloc[i : i + 64] for i in range(0, len(pdf), 64)][::-1]
+    out = next(_handler((0,), iter(chunks), _State()))
+    want = _batch_fold(emb_rows)
+    assert list(out["vec_id"]) == [c[0] for c in want["centers"]]
+    assert list(out["weight"]) == [c[2] for c in want["centers"]]
+    assert set(out["tau"]) == {want["tau"]}
+
+
+def test_sharded_coreset_one_batch_one_compose_job(
+    spark, sf_dir, sharded_rows, monkeypatch
+):
+    """The sharded key streams its replay as one micro-batch (every
+    shard's final seq is 1), composes the shards with at most one
+    Spark job after the stream, and returns a frame whose plan has no
+    Scan ExistingRDD (collecting it needs no Python worker)."""
+    from pyspark.sql import functions as F
+
+    from diversity_maximization_spark.streaming import coreset as sc
+
+    group, seen = "stream-coreset-compose", {}
+    ctx = spark.sparkContext
+    orig = sc.streaming_coreset_sharded_snapshots
+
+    def then_tag(*a, **kw):
+        seen["snaps"] = orig(*a, **kw)
+        ctx.setJobGroup(group, group)
+        return seen["snaps"]
+
+    monkeypatch.setattr(sc, "streaming_coreset_sharded_snapshots", then_tag)
+    try:
+        res = sc.streaming_coreset_sharded(spark, sf_dir)
+        rows = sorted(map(tuple, res.collect()))
+    finally:
+        ctx.setLocalProperty("spark.jobGroup.id", None)
+    assert len(ctx.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert rows == sorted(map(tuple, sharded_rows))
+    final = seen["snaps"].groupBy("shard").agg(F.max("seq").alias("seq")).collect()
+    assert len(final) == 4 and {r["seq"] for r in final} == {1}
+    assert "ExistingRDD" not in res._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "env, passed, want",
+    [(None, None, 2), ("3", None, 3), ("3", 2, 2), ("3", 1, 1)],
+)
+def test_replay_fpt_env_overrides_only_the_default(
+    spark, monkeypatch, tmp_path, env, passed, want
+):
+    """SPARK_GRAFT_REPLAY_FPT replaces the default files per trigger
+    and never a value the caller passes."""
+    from pyspark.sql.streaming.readwriter import DataStreamReader
+
+    from diversity_maximization_spark.streaming.replay import stream_events
+
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_REPLAY_FPT", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_REPLAY_FPT", env)
+    opts = {}
+    orig = DataStreamReader.option
+
+    def record(self, key, value):
+        opts[key] = value
+        return orig(self, key, value)
+
+    monkeypatch.setattr(DataStreamReader, "option", record)
+    kw = {} if passed is None else {"files_per_trigger": passed}
+    stream_events(spark, str(tmp_path), **kw)
+    assert opts["maxFilesPerTrigger"] == want
