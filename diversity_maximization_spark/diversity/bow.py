@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
 from ..registry import query
 from ..sources import load
 from . import kernel as K
@@ -160,26 +161,25 @@ def _gmm_bow_oracle(k: int = 8) -> str:
     (sqrt of an exact integer sum) are bit-identical to numpy's;
     the normalized dot differs only in the summation tail, absorbed
     by round(.,6) on the reported distance."""
-    from .queries import _coreset_mr_oracle, _duck_sqdist
+    from .queries import _coreset_mr_oracle
 
     base = _coreset_mr_oracle(p=4, kprime=16, m=1, seed=42,
                               source_sql=_BOW_SOURCE_SQL)
     head = base[: base.rindex("\nSELECT c.part, c.vec_id,")]
-    norm = ("list_transform({v}, x -> CAST(x AS DOUBLE) / "
-            "sqrt(list_sum(list_transform({v}, y -> "
-            "CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))")
-    cosd = ("greatest(1 - list_sum(list_transform("
-            "generate_series(1, len({a})), i -> ({a})[i] * ({b})[i])), 0.0)")
+
+    def cosd(a: str, b: str) -> str:
+        return f"greatest(1 - {V.duck_dot(a, b)}, 0.0)"
+
     parts = [head, f"""
 , dmem AS MATERIALIZED (
   SELECT d.vec_id, e.embedding
   FROM delegates d JOIN e ON e.part = d.part AND e.vec_id = d.vec_id),
 mem AS MATERIALIZED (
-  SELECT vec_id, {norm.format(v='embedding')} AS nv
+  SELECT vec_id, {V.duck_l2_normalize('embedding')} AS nv
   FROM (SELECT vec_id, embedding FROM centers UNION ALL SELECT * FROM dmem)),
 g0 AS (SELECT vec_id, nv FROM mem ORDER BY vec_id LIMIT 1),
 t0 AS MATERIALIZED (
-  SELECT m.vec_id, m.nv, {cosd.format(a='m.nv', b='g.nv')} AS md
+  SELECT m.vec_id, m.nv, {cosd('m.nv', 'g.nv')} AS md
   FROM mem m CROSS JOIN g0 g WHERE m.vec_id <> g.vec_id)"""]
     for r in range(1, k):
         parts.append(f"""
@@ -188,7 +188,7 @@ t0 AS MATERIALIZED (
         if r < k - 1:
             parts.append(f"""
 , t{r} AS MATERIALIZED (
-  SELECT t.vec_id, t.nv, least(t.md, {cosd.format(a='t.nv', b='g.nv')}) AS md
+  SELECT t.vec_id, t.nv, least(t.md, {cosd('t.nv', 'g.nv')}) AS md
   FROM t{r - 1} t CROSS JOIN g{r} g WHERE t.vec_id <> g.vec_id)""")
     sel = ["SELECT CAST(0 AS INTEGER) AS sel_order, vec_id AS doc_id, "
            "CAST(0.0 AS DOUBLE) AS cos_dist_when_chosen FROM g0"]

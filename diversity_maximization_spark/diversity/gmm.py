@@ -14,7 +14,7 @@ Execution strategy (A/B-measured at sf0.1/k=16, 2000x64):
   the earlier stacked-`least()` formulation (localCheckpoint every 8)
   re-evaluated up to 8 interpreted higher-order-function distances
   per row by the late rounds (5.9s total vs 2.x after);
-- the distance stays JVM-side (`aggregate(zip_with(...))`): an
+- the distance stays JVM-side (the `functions/vector` fold): an
   Arrow/numpy `mapInPandas` variant measured ~245 ms/round vs ~110-175
   ms for the JVM expression at this row count — the Python worker
   round-trip dominates when partitions are small. (At much larger
@@ -41,31 +41,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _sqdist_to_lit(vec_col: str, vec) -> F.Column:
-    from ..functions.vector import lit_double_array
-
-    lit_arr = lit_double_array(vec)
-    return F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            lit_arr,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-
-
-def _sqdist_local(a, b) -> float:
-    """Sequential-fold squared distance — EXACTLY the IEEE operation
-    order of _sqdist_to_lit's aggregate(zip_with(...)), so a locally
-    refined min_d2 is bit-identical to the JVM column."""
-    s = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        s = s + d * d
-    return s
+from ..functions import vector as V
 
 
 def gmm_distributed(
@@ -104,7 +80,7 @@ def gmm_distributed(
     # more picks clear it locally per job.
     m = batch if batch is not None else max(256, 32 * k)
     cur = base.withColumn(
-        "min_d2", _sqdist_to_lit(vec_col, first[vec_col])
+        "min_d2", V.sq_l2(vec_col, V.lit_array_sql(first[vec_col]))
     ).cache()
     prev = None
     while len(centers) < k:
@@ -148,13 +124,13 @@ def gmm_distributed(
             new_centers.append(cvec)
             del cand[j]
             for c in cand:
-                nd2 = _sqdist_local(c[2], cvec)
+                nd2 = V.fold_sq_l2(c[2], cvec)
                 if nd2 < c[1]:
                     c[1] = nd2
         if len(centers) < k and new_centers:
             col = F.col("min_d2")
             for vec in new_centers:
-                col = F.least(col, _sqdist_to_lit(vec_col, vec))
+                col = F.least(col, V.sq_l2(vec_col, V.lit_array_sql(vec)))
             new = cur.withColumn("min_d2", col).cache()
             if prev is not None:
                 prev.unpersist()
@@ -174,7 +150,9 @@ def gmm_distributed(
             if len(centers) < k:
                 new = cur.withColumn(
                     "min_d2",
-                    F.least("min_d2", _sqdist_to_lit(vec_col, far[vec_col])),
+                    F.least(
+                        "min_d2", V.sq_l2(vec_col, V.lit_array_sql(far[vec_col]))
+                    ),
                 ).cache()
                 if prev is not None:
                     prev.unpersist()

@@ -272,24 +272,12 @@ def div_eval_bipartition_exhaustive(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _duck_sqdist(a: str, b: str) -> str:
-    """Squared-L2 as a strict left fold — bit-identical to
-    gmm._sqdist_to_lit's aggregate(zip_with(...)) (list_sum is a
-    sequential fold over DOUBLE; verified bitwise on the fixture
-    embeddings)."""
-    return (
-        f"list_sum(list_transform(generate_series(1, len({a})), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) "
-        f"* (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))))"
-    )
-
-
 def _gmm_oracle(k: int = 16, cosine: bool = False) -> str:
     """Unrolled farthest-first traversal in DuckDB: seed = min vec_id,
     then k-1 rounds of (argmax min_d2, tie-break min id) + least()
     update, each round dropping the picked row. The comparisons are on
     raw doubles, which is sound because both engines compute the SAME
-    left-fold IEEE operation sequence (see _duck_sqdist); sqrt and
+    left-fold IEEE operation sequence (functions/vector); sqrt and
     round(.,6) only on the reported column, exactly like the engine.
     The CTE chain must be MATERIALIZED: inlining doubles per round
     (s15 would expand to 2^15 scans).
@@ -316,7 +304,7 @@ def _gmm_oracle(k: int = 16, cosine: bool = False) -> str:
         "WITH " + e_cte,
         "p0 AS (SELECT vec_id, embedding FROM e ORDER BY vec_id LIMIT 1),",
         "s0 AS MATERIALIZED (SELECT e.vec_id, e.embedding, "
-        f"{_duck_sqdist('e.embedding', 'p0.embedding')} AS md "
+        f"{V.duck_sq_l2('e.embedding', 'p0.embedding')} AS md "
         "FROM e CROSS JOIN p0 WHERE e.vec_id <> p0.vec_id)",
     ]
     for r in range(1, k):
@@ -327,7 +315,7 @@ def _gmm_oracle(k: int = 16, cosine: bool = False) -> str:
         if r < k - 1:
             parts.append(
                 f", s{r} AS MATERIALIZED (SELECT s.vec_id, s.embedding, "
-                f"least(s.md, {_duck_sqdist('s.embedding', f'p{r}.embedding')}) AS md "
+                f"least(s.md, {V.duck_sq_l2('s.embedding', f'p{r}.embedding')}) AS md "
                 f"FROM s{r - 1} s CROSS JOIN p{r} WHERE s.vec_id <> p{r}.vec_id)"
             )
     sel = [
@@ -382,7 +370,7 @@ def _coreset_mr_oracle(
     would need sub-ulp near-ties, absent from the fixtures."""
     from .coreset import part_mix
 
-    dist = lambda a, b: f"sqrt({_duck_sqdist(a, b)})"  # noqa: E731
+    dist = V.duck_l2_dist
     head = f"""
 WITH e AS MATERIALIZED (
   SELECT vec_id, embedding, label, {part_mix(p, seed)} AS part
@@ -474,7 +462,7 @@ def _matching_oracle(k: int = 16) -> str:
     orientation, matching the engine's pair order."""
     base = _coreset_mr_oracle()
     head = base[: base.rindex("\nSELECT c.part, c.vec_id,")]
-    dist = f"sqrt({_duck_sqdist('a.embedding', 'b.embedding')})"
+    dist = V.duck_l2_dist("a.embedding", "b.embedding")
     parts = [
         head,
         """
@@ -543,7 +531,7 @@ def _local_search_oracle(k: int = 12, rounds: int = 50,
     on the one reported float."""
     base = _coreset_mr_oracle()
     head = base[: base.rindex("\nSELECT c.part, c.vec_id,")]
-    sq = _duck_sqdist("s.embedding", "c.embedding")
+    sq = V.duck_sq_l2("s.embedding", "c.embedding")
     parts = [head, """
 , dmem AS MATERIALIZED (
   SELECT d.vec_id, e.embedding
@@ -552,12 +540,12 @@ mem AS MATERIALIZED (
   SELECT vec_id, embedding FROM centers UNION ALL SELECT * FROM dmem),
 pd AS MATERIALIZED (
   SELECT a.vec_id AS a, b.vec_id AS b,
-         sqrt(""" + _duck_sqdist("a.embedding", "b.embedding") + """) AS d
+         """ + V.duck_l2_dist("a.embedding", "b.embedding") + """ AS d
   FROM mem a JOIN mem b ON a.vec_id <> b.vec_id),
 f0 AS MATERIALIZED (
   SELECT vec_id, embedding FROM mem ORDER BY vec_id LIMIT 1),
 g0 AS MATERIALIZED (
-  SELECT s.vec_id, s.embedding, """ + _duck_sqdist("s.embedding", "c.embedding").replace("{a}", "s.embedding") + """ AS md
+  SELECT s.vec_id, s.embedding, """ + V.duck_sq_l2("s.embedding", "c.embedding") + """ AS md
   FROM mem s CROSS JOIN f0 c WHERE s.vec_id <> c.vec_id)"""]
     # farthest-first init rounds 1..k-1 (squared distance — argmax-equivalent)
     for r in range(1, k):
@@ -661,7 +649,7 @@ mm AS MATERIALIZED (
   WHERE a.rn <= 2),
 pd AS MATERIALIZED (
   SELECT a.vec_id AS a, b.vec_id AS b,
-         sqrt({_duck_sqdist('a.embedding', 'b.embedding')}) AS d
+         {V.duck_l2_dist('a.embedding', 'b.embedding')} AS d
   FROM mm a JOIN mm b ON a.vec_id <> b.vec_id),
 sel0 AS MATERIALIZED (
   SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS pos, vec_id, label FROM (
@@ -969,11 +957,6 @@ def _kmeans_oracle(k: int = 8, iters: int = 5) -> str:
     clusters keeping their previous center via coalesce. Distances
     against center LISTS in dim order, so the fold order matches the
     engine's zip_with literal expression."""
-    sq = (
-        "list_sum(list_transform(generate_series(1, len({e})), "
-        "j -> (CAST(({e})[j] AS DOUBLE) - ({c})[j]) "
-        "* (CAST(({e})[j] AS DOUBLE) - ({c})[j])))"
-    )
     head = f"""
 WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
 init AS (SELECT vec_id, embedding,
@@ -990,7 +973,7 @@ ctr0 AS MATERIALIZED (
   SELECT vec_id, embedding, cluster FROM (
     SELECT e.vec_id, e.embedding, c.cluster,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             {sq.format(e='e.embedding', c='c.cv')} ASC, c.cluster ASC) AS rn
+             {V.duck_sq_l2('e.embedding', 'c.cv')} ASC, c.cluster ASC) AS rn
     FROM e CROSS JOIN ctr{i - 1} c) WHERE rn = 1),
 mu{i} AS MATERIALIZED (
   SELECT cluster, dim,
@@ -1010,26 +993,20 @@ ctr{i} AS MATERIALIZED (
 SELECT vec_id, CAST(cluster AS INTEGER) AS cluster, round(sqrt(d), 6) AS dist
 FROM (
   SELECT e.vec_id, c.cluster,
-         {sq.format(e='e.embedding', c='c.cv')} AS d,
+         {V.duck_sq_l2('e.embedding', 'c.cv')} AS d,
          ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-           {sq.format(e='e.embedding', c='c.cv')} ASC, c.cluster ASC) AS rn
+           {V.duck_sq_l2('e.embedding', 'c.cv')} ASC, c.cluster ASC) AS rn
   FROM e CROSS JOIN ctr{iters} c) WHERE rn = 1""")
     return "".join(parts)
 
 
-def _kmeans_chain(k: int = 8, iters: int = 5) -> tuple[str, str]:
-    """(WITH-prefix, sq-template) of the unrolled Lloyd replay —
+def _kmeans_chain(k: int = 8, iters: int = 5) -> str:
+    """WITH-prefix of the unrolled Lloyd replay —
     the _kmeans_oracle chain up to ctr{iters}, shared with the
     silhouette oracle (the graph.py _lpa_chain_prefix refactor
     pattern)."""
     full = _kmeans_oracle(k, iters)
-    prefix = full.split("\nSELECT vec_id, CAST(cluster AS INTEGER)", 1)[0]
-    sq = (
-        "list_sum(list_transform(generate_series(1, len({e})), "
-        "j -> (CAST(({e})[j] AS DOUBLE) - ({c})[j]) "
-        "* (CAST(({e})[j] AS DOUBLE) - ({c})[j])))"
-    )
-    return prefix, sq
+    return full.split("\nSELECT vec_id, CAST(cluster AS INTEGER)", 1)[0]
 
 
 def _silhouette_oracle(k: int = 8, iters: int = 5) -> str:
@@ -1037,8 +1014,8 @@ def _silhouette_oracle(k: int = 8, iters: int = 5) -> str:
     the ordered list of center distances — a = nearest, b = second
     nearest, s = (b - a) / greatest(a, b) — identical expression
     text both engines, ties collapsing to s = 0 in both."""
-    prefix, sq = _kmeans_chain(k, iters)
-    d_expr = sq.format(e="e.embedding", c="c.cv")
+    prefix = _kmeans_chain(k, iters)
+    d_expr = V.duck_sq_l2("e.embedding", "c.cv")
     return (
         prefix
         + f"""
@@ -1086,9 +1063,7 @@ def div_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_ids (deterministic); argmin ties break to the lowest cluster
     index."""
     pts, centers = _kmeans_fit(spark, sf_dir, k=8, iters=5)
-    from .gmm import _sqdist_to_lit
-
-    dists = F.array(*[_sqdist_to_lit("embedding", c) for c in centers])
+    dists = F.array(*[V.sq_l2("embedding", V.lit_array_sql(c)) for c in centers])
     out = pts.select(
         "vec_id",
         (F.array_position(dists, F.array_min(dists)) - 1).cast("int").alias("cluster"),
@@ -1102,15 +1077,13 @@ def _kmeans_fit(spark, sf_dir, k=8, iters=5):
     converged center lists). Shared by div_kmeans and
     agg_kmeans_silhouette — see div_kmeans for the exactness
     contract."""
-    from .gmm import _sqdist_to_lit
-
     pts = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
     centers = [
         list(r["embedding"])
         for r in pts.orderBy("vec_id").limit(k).collect()
     ]
     for _ in range(iters):
-        dists = F.array(*[_sqdist_to_lit("embedding", c) for c in centers])
+        dists = F.array(*[V.sq_l2("embedding", V.lit_array_sql(c)) for c in centers])
         assigned = pts.select(
             "vec_id",
             "embedding",
@@ -1156,9 +1129,7 @@ def agg_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map over the points, centers as literals —
     the div_kmeans assignment shape with one extra array_sort."""
     pts, centers = _kmeans_fit(spark, sf_dir, k=8, iters=5)
-    from .gmm import _sqdist_to_lit
-
-    dists = F.array(*[_sqdist_to_lit("embedding", c) for c in centers])
+    dists = F.array(*[V.sq_l2("embedding", V.lit_array_sql(c)) for c in centers])
     ds = F.array_sort(dists)
     a2 = ds.getItem(0)
     b2 = ds.getItem(1)
@@ -1293,7 +1264,7 @@ def _coreset_tree_oracle(p1: int = 8, p2: int = 2, kprime: int = 16,
     through the output sums, which are exact integer additions)."""
     base = _coreset_mr_oracle(p=p1, kprime=kprime, m=0, seed=seed)
     head = base[: base.rindex("\ndelegates AS MATERIALIZED (")]
-    dist = lambda a, b: f"sqrt({_duck_sqdist(a, b)})"  # noqa: E731
+    dist = V.duck_l2_dist
     parts = [head, f"""
 sizes AS (
   SELECT part, rank, COUNT(*) AS cluster_size FROM assign GROUP BY 1, 2),

@@ -166,31 +166,6 @@ _MMR_K = 10
 _MMR_LAMBDA = 0.5
 
 
-def _cos_to_lit(vec_col: str, vec) -> F.Column:
-    lit_arr = V.lit_double_array(vec)
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), lit_arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    qn = sum(float(x) * float(x) for x in vec) ** 0.5
-    return dot / (F.sqrt(V.sq_norm(vec_col)) * F.lit(qn))
-
-
-def _cos_local(x_vec, y_vec, y_norm: float) -> float:
-    """Sequential-fold cosine — EXACTLY the IEEE operation order of
-    ``_cos_to_lit`` (dot and sq_norm as left folds, then
-    ``dot / (sqrt(sqn) * y_norm)``), so locally refined max_sim is
-    bit-identical to the JVM column."""
-    s = 0.0
-    for x, y in zip(x_vec, y_vec):
-        s = s + float(x) * float(y)
-    sq = 0.0
-    for x in x_vec:
-        sq = sq + float(x) * float(x)
-    return s / (math.sqrt(sq) * y_norm)
-
-
 def mmr_select(
     spark: SparkSession,
     sf_dir: str,
@@ -228,7 +203,7 @@ def mmr_over(
     tied from outside (strictness protects the min-id tie-break).
     The first pick of each round needs no threshold test — before
     any in-batch refinement the sort order is the global one. Local
-    refinement uses ``_cos_local`` (bit-identical fold), so picks
+    refinement uses the Python folds (bit-identical), so picks
     and reported scores equal the one-job-per-pick formulation —
     A/B-checked in tests/test_llm.py with batch=1. k=10 now takes
     1-2 jobs instead of 10."""
@@ -249,10 +224,16 @@ def mmr_over(
     )
     qvec = [r["s"] / 1e6 / r["c"] for r in dim_rows]
 
+    def cos_to(vec, norm: float) -> F.Column:
+        # dot / (sqrt(sqn) * norm): the local refinement's order
+        return V.dot("embedding", V.lit_array_sql(vec)) / (
+            F.sqrt(V.sq_norm("embedding")) * F.lit(norm)
+        )
+
     state = e.select(
         "vec_id",
         "embedding",
-        _cos_to_lit("embedding", qvec).alias("rel"),
+        cos_to(qvec, V.fold_dot(qvec, qvec) ** 0.5).alias("rel"),
         F.lit(-1.0).alias("max_sim"),
     ).cache()
     m = batch if batch is not None else max(64, 8 * k)
@@ -287,16 +268,18 @@ def mmr_over(
                 break  # an uncollected point could beat or tie this pick
             picks.append((len(picks), cid, crel, sc))
             del cand[j]
-            qn = sum(float(x) * float(x) for x in cvec) ** 0.5
+            qn = V.fold_dot(cvec, cvec) ** 0.5
             new_picked.append((cvec, qn))
             for c in cand:
-                cos = _cos_local(c[3], cvec, qn)
+                cos = V.fold_dot(c[3], cvec) / (
+                    math.sqrt(V.fold_dot(c[3], c[3])) * qn
+                )
                 if cos > c[2]:
                     c[2] = cos
         if len(picks) < k and new_picked:
             col = F.col("max_sim")
-            for vec, _ in new_picked:
-                col = F.greatest(col, _cos_to_lit("embedding", vec))
+            for vec, qn in new_picked:
+                col = F.greatest(col, cos_to(vec, qn))
             nxt = state.withColumn("max_sim", col).cache()
             if prev is not None:
                 prev.unpersist()
@@ -318,7 +301,9 @@ def _mmr_oracle(k: int = _MMR_K) -> str:
     picks argmax (score DESC, vec_id ASC) and drops the picked row,
     exactly the engine's excluded-ids discipline. MATERIALIZED stops
     the per-round chain from inlining exponentially."""
-    sq = "list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+    def nrm(v: str) -> str:
+        return f"sqrt({V.duck_sq_norm(v)})"
+
     head = f"""
 WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
 dims AS (SELECT unnest(generate_series(1, (SELECT max(len(embedding)) FROM e))) AS i),
@@ -328,12 +313,11 @@ q AS MATERIALIZED (
          COUNT(*) AS c
   FROM e CROSS JOIN dims GROUP BY i),
 qv AS (SELECT list((s / 1000000.0) / c ORDER BY pos) AS v FROM q),
-qn AS (SELECT sqrt(list_sum({sq.format(v='v')})) AS n FROM qv),
+qn AS (SELECT {nrm('v')} AS n FROM qv),
 s0 AS MATERIALIZED (
   SELECT e.vec_id, e.embedding,
-         list_sum(list_transform(generate_series(1, len(e.embedding)),
-           i -> CAST(e.embedding[i] AS DOUBLE) * qv.v[i]))
-           / (sqrt(list_sum({sq.format(v='e.embedding')})) * qn.n) AS rel,
+         {V.duck_dot('e.embedding', 'qv.v')}
+           / ({nrm('e.embedding')} * qn.n) AS rel,
          CAST(-1.0 AS DOUBLE) AS max_sim
   FROM e CROSS JOIN qv CROSS JOIN qn)"""
     parts = [head]
@@ -341,16 +325,15 @@ s0 AS MATERIALIZED (
         parts.append(f"""
 , p{r} AS MATERIALIZED (
   SELECT vec_id, embedding, rel, 0.5 * rel - 0.5 * max_sim AS mmr_score,
-         sqrt(list_sum({sq.format(v='embedding')})) AS pn
+         {nrm('embedding')} AS pn
   FROM s{r - 1} ORDER BY 0.5 * rel - 0.5 * max_sim DESC, vec_id ASC LIMIT 1)""")
         if r < k:
             parts.append(f"""
 , s{r} AS MATERIALIZED (
   SELECT s.vec_id, s.embedding, s.rel,
          greatest(s.max_sim,
-           list_sum(list_transform(generate_series(1, len(s.embedding)),
-             i -> CAST(s.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE)))
-           / (sqrt(list_sum({sq.format(v='s.embedding')})) * p.pn)) AS max_sim
+           {V.duck_dot('s.embedding', 'p.embedding')}
+           / ({nrm('s.embedding')} * p.pn)) AS max_sim
   FROM s{r - 1} s CROSS JOIN p{r} p WHERE s.vec_id <> p.vec_id)""")
     sel = " UNION ALL ".join(
         f"SELECT CAST({r - 1} AS INTEGER) AS sel_order, vec_id, rel, mmr_score FROM p{r}"
@@ -618,17 +601,14 @@ _FL_SCALE = 10**9
 
 
 def _facility_location_oracle(k: int = _FL_K) -> str:
-    sq = "list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
     head = f"""
 WITH e AS MATERIALIZED (
-  SELECT vec_id, embedding, sqrt({sq.format(v='embedding')}) AS nrm
+  SELECT vec_id, embedding, sqrt({V.duck_sq_norm('embedding')}) AS nrm
   FROM embeddings),
 pd AS MATERIALIZED (
   SELECT a.vec_id AS v, b.vec_id AS c,
          CAST(round(
-           list_sum(list_transform(generate_series(1, len(a.embedding)),
-             i -> CAST(a.embedding[i] AS DOUBLE)
-                  * CAST(b.embedding[i] AS DOUBLE)))
+           {V.duck_dot('a.embedding', 'b.embedding')}
            / (a.nrm * b.nrm) * {_FL_SCALE}) AS BIGINT) AS s
   FROM e a CROSS JOIN e b),
 s0 AS MATERIALIZED (SELECT vec_id AS v, CAST(0 AS BIGINT) AS cur FROM e),
@@ -701,15 +681,20 @@ def facility_location_over(
     shared by select_facility_location and api.facility_location.
     Similarities quantize to BIGINT at 1e9 so greedy state is
     order-independent integers (see the registered key's docstring
-    for the scale argument). Refuses inputs above ``max_points``
-    (one column-pruned count up front): the n^2 pair table is only
-    sound on a coreset — reduce larger corpora with div_coreset_mr
-    first."""
+    for the scale argument). One aggregate up front refuses inputs
+    above ``max_points`` (the n^2 pair table is only sound on a
+    coreset — reduce larger corpora with div_coreset_mr first),
+    duplicate ids and zero vectors (cosine is undefined there); k is
+    clamped to the number of candidates."""
     spark = df.sparkSession
-    e = df.select(
+    en = df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    n = e.count()
+    ).withColumn("nrm", F.sqrt(V.sq_norm("embedding")))
+    n, n_ids, n_zero = en.agg(
+        F.count(F.lit(1)),
+        F.countDistinct("vec_id"),
+        F.count(F.when(F.col("nrm") == 0, 1)),
+    ).first()
     if n > max_points:
         raise ValueError(
             f"facility_location: {n} input points exceed the "
@@ -717,12 +702,17 @@ def facility_location_over(
             "candidates with a coreset first (div_coreset_mr / "
             "api.coreset) and run facility location over the coreset."
         )
-    sqf = "aggregate(transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
-    en = e.select(
-        "vec_id",
-        "embedding",
-        F.expr(f"sqrt({sqf.format(v='embedding')})").alias("nrm"),
-    )
+    if n_ids != n:
+        raise ValueError(
+            f"facility_location: {n - n_ids} duplicate {id_col} values; "
+            "each candidate needs a unique id."
+        )
+    if n_zero:
+        raise ValueError(
+            f"facility_location: {n_zero} zero-norm {vec_col} vectors; "
+            "cosine similarity is undefined for them."
+        )
+    k = min(k, n)
     a = en.select(
         F.col("vec_id").alias("v"),
         F.col("embedding").alias("av"),
@@ -733,15 +723,12 @@ def facility_location_over(
         F.col("embedding").alias("cv"),
         F.col("nrm").alias("cn"),
     )
-    dot = (
-        "aggregate(zip_with(av, cv, (x, y) -> CAST(x AS DOUBLE)"
-        " * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
     pairs = a.crossJoin(F.broadcast(b)).select(
         "v",
         "c",
         F.expr(
-            f"CAST(round({dot} / (an * cn) * {_FL_SCALE}) AS BIGINT)"
+            f"CAST(round({V.dot_sql('av', 'cv')} / (an * cn) * {_FL_SCALE})"
+            " AS BIGINT)"
         ).alias("s"),
     )
 

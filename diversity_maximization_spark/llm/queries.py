@@ -33,10 +33,8 @@ def embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.array_join(
             F.expr(
-                "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) / "
-                "sqrt(aggregate(zip_with(embedding, embedding, (p, q) -> "
-                "CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), CAST(0 AS DOUBLE), "
-                "(s, v) -> s + v)) * 1000000) AS BIGINT))"
+                "transform(embedding, u -> CAST(round(CAST(u AS DOUBLE) / "
+                f"sqrt({V.sq_norm_sql('embedding')}) * 1000000) AS BIGINT))"
             ),
             ",",
         ).alias("unit_vec_q"),
@@ -155,19 +153,10 @@ def embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         if comps[i, j] < 0:
             comps[i] = -comps[i]
 
-    proj_cols = []
-    for i in range(_PCA_DIM):
-        lit = V.lit_double_array(comps[i])
-        centered_dot = F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                lit,
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        ) - F.lit(float(comps[i] @ mu))
-        proj_cols.append(centered_dot.alias(f"pc{i}"))
+    proj_cols = [
+        (V.dot("embedding", V.lit_array_sql(c)) - F.lit(float(c @ mu))).alias(f"pc{i}")
+        for i, c in enumerate(comps)
+    ]
     return e.select("vec_id", *proj_cols)
 
 
@@ -607,13 +596,6 @@ def embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DIV_DIST = (
-    "sqrt(list_sum(list_transform(generate_series(1, len({a})), "
-    "i -> (CAST(({a})[i] AS DOUBLE) - CAST(({b})[i] AS DOUBLE)) "
-    "* (CAST(({a})[i] AS DOUBLE) - CAST(({b})[i] AS DOUBLE)))))"
-)
-
-
 @query(
     "corpus_diversity_by_source",
     oracle=f"""
@@ -622,7 +604,7 @@ WITH cand AS MATERIALIZED (
   FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
   WHERE e.vec_id % 5 = 0
 ), pairs AS (
-  SELECT a.source, {_DIV_DIST.format(a='a.embedding', b='b.embedding')} AS dist
+  SELECT a.source, {V.duck_l2_dist('a.embedding', 'b.embedding')} AS dist
   FROM cand a JOIN cand b
     ON a.source = b.source AND a.vec_id < b.vec_id
 )
@@ -668,7 +650,7 @@ def _diverse_per_source_oracle(k: int = 4) -> str:
     hash partition): seed = lowest vec_id of each source's embedded
     docs, k-1 rounds of per-group argmax (ROW_NUMBER over source,
     min-distance DESC, vec_id ASC) + least() relaxation."""
-    dist = _DIV_DIST
+    dist = V.duck_l2_dist
     head = f"""
 WITH g AS MATERIALIZED (
   SELECT d.source, e.vec_id, e.embedding
@@ -680,7 +662,7 @@ p0 AS MATERIALIZED (
     FROM g) WHERE rn = 1),
 s0 AS MATERIALIZED (
   SELECT g.source, g.vec_id, g.embedding,
-         {dist.format(a='g.embedding', b='c.embedding')} AS md
+         {dist('g.embedding', 'c.embedding')} AS md
   FROM g JOIN p0 c ON c.source = g.source WHERE g.vec_id <> c.vec_id)"""
     parts = [head]
     for r in range(1, k):
@@ -695,7 +677,7 @@ s0 AS MATERIALIZED (
             parts.append(f"""
 , s{r} AS MATERIALIZED (
   SELECT s.source, s.vec_id, s.embedding,
-         least(s.md, {dist.format(a='s.embedding', b='c.embedding')}) AS md
+         least(s.md, {dist('s.embedding', 'c.embedding')}) AS md
   FROM s{r - 1} s JOIN p{r} c ON c.source = s.source
   WHERE s.vec_id <> c.vec_id)""")
     sel = [
@@ -717,8 +699,8 @@ def select_diverse_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline uses to pick maximally-spread exemplar documents per
     source (dedup's complement: instead of dropping near-dups, pick
     the spread). Engine shape: one shuffle by source, then an Arrow
-    applyInPandas greedy per group using the same sequential-fold
-    arithmetic as gmm._sqdist_local, so every group's selection
+    applyInPandas greedy per group using the fold-exact
+    vector.farthest_first, so every group's selection
     matches the unrolled SQL replay (see
     _diverse_per_source_oracle). At 100 TB groups are processed in
     parallel and each group's kernel is O(n_g * k) vectorized
@@ -730,29 +712,15 @@ def select_diverse_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = d.join(e, d.doc_id == e.vec_id).select("source", "vec_id", "embedding")
 
     def ff(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..diversity.gmm import _sqdist_local
-
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         vecs = [list(map(float, v)) for v in pdf["embedding"]]
         ids = list(pdf["vec_id"])
         src = pdf["source"].iloc[0]
-        k = min(4, len(ids))
-        chosen = [0]
-        out = [(src, 0, int(ids[0]), 0.0)]
-        md = [_sqdist_local(v, vecs[0]) for v in vecs]
-        for rank in range(1, k):
-            best, best_i = -1.0, -1
-            for i in range(len(ids)):
-                if i in chosen:
-                    continue
-                if md[i] > best:
-                    best, best_i = md[i], i
-            chosen.append(best_i)
-            out.append((src, rank, int(ids[best_i]), best ** 0.5))
-            for i in range(len(ids)):
-                nd = _sqdist_local(vecs[i], vecs[best_i])
-                if nd < md[i]:
-                    md[i] = nd
+        chosen, d2 = V.farthest_first(vecs, 4)
+        out = [
+            (src, rank, int(ids[i]), d ** 0.5)
+            for rank, (i, d) in enumerate(zip(chosen, d2))
+        ]
         return pd.DataFrame(
             out, columns=["source", "sel_order", "vec_id", "dist_when_chosen"]
         )

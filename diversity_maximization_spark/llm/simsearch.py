@@ -104,69 +104,19 @@ def _assign_centroids(df: DataFrame, cents: np.ndarray, out_col: str) -> DataFra
     round-trips shortest-repr doubles exactly, so the assignment
     arithmetic is bit-identical."""
     cent_arr = F.expr(
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in c)
-            + ")"
-            for c in cents
-        )
-        + ")"
+        "array(" + ", ".join(V.lit_array_sql(c) for c in cents) + ")"
     )
     # argmin over centroids of L2; ties -> lowest centroid id
     expr = F.expr(
         "array_position(cd, array_min(cd)) - 1"
     )
-    cd = F.expr(
-        "transform(cents, c -> aggregate(zip_with(embedding, c, "
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "CAST(0 AS DOUBLE), (s, v) -> s + v))"
-    )
+    cd = F.expr(f"transform(cents, c -> {V.sq_l2_sql('embedding', 'c')})")
     return (
         df.withColumn("cents", cent_arr)
         .withColumn("cd", cd)
         .withColumn(out_col, expr.cast("int"))
         .drop("cents", "cd")
     )
-
-
-def _fold_d2(a, b) -> float:
-    """Squared L2 as a strict LEFT FOLD over python floats — the
-    identical IEEE operation sequence as the engine's
-    aggregate(zip_with(...)) fold and the oracle's list_sum fold, so
-    driver-side selections made on these values replay bit-for-bit
-    in both engines (no numpy pairwise-summation drift)."""
-    s = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        s += d * d
-    return s
-
-
-def _ff_foldexact(X: list, k: int) -> list[int]:
-    """Farthest-first traversal with fold-exact distances: seed =
-    index 0, then argmax of min-distance (strict >, so ties keep the
-    LOWEST index — the same pick as ORDER BY md DESC, pos ASC)."""
-    n = len(X)
-    k = min(k, n)
-    chosen = [0]
-    in_chosen = {0}
-    md = [_fold_d2(x, X[0]) for x in X]
-    for _ in range(1, k):
-        best, bi = -1.0, -1
-        for i in range(n):
-            if i in in_chosen:
-                continue
-            if md[i] > best:
-                best, bi = md[i], i
-        chosen.append(bi)
-        in_chosen.add(bi)
-        cx = X[bi]
-        for i in range(n):
-            d = _fold_d2(X[i], cx)
-            if d < md[i]:
-                md[i] = d
-    return chosen
 
 
 def ivf_topk(
@@ -193,20 +143,20 @@ def ivf_topk(
     bucket's matrix executor-local.
 
     Determinism (hash-checked since round 5): centroid selection and
-    the probe map run fold-exact on the driver (_ff_foldexact — same
-    IEEE sequence as the SQL oracle's unrolled replay), assignment is
-    the JVM fold (_assign_centroids), and the emitted top-k is
-    re-scored with the exact fold cosine — the BLAS GEMM is only a
-    candidate PRUNE whose k+3 margin absorbs its summation-order
-    differences, so the result equals the exact top-k within probed
-    buckets and the whole pipeline replays in DuckDB
+    the probe map run fold-exact on the driver (vector.farthest_first
+    — same IEEE sequence as the SQL oracle's unrolled replay),
+    assignment is the JVM fold (_assign_centroids), and the emitted
+    top-k is re-scored with the exact fold cosine — the BLAS GEMM is
+    only a candidate PRUNE whose k+3 margin absorbs its
+    summation-order differences, so the result equals the exact top-k
+    within probed buckets and the whole pipeline replays in DuckDB
     (_ivf_oracle)."""
     import pandas as pd
 
     sample = e.orderBy("vec_id").limit(512).collect()
     Xf = [[float(v) for v in r["embedding"]] for r in sample]
     X = np.array(Xf, dtype=np.float64)
-    cidx = _ff_foldexact(Xf, n_centroids)
+    cidx, _ = V.farthest_first(Xf, n_centroids)
     cents = X[cidx]
 
     data = _assign_centroids(e, cents, "bucket")
@@ -216,7 +166,7 @@ def ivf_topk(
     cf = [Xf[i] for i in cidx]
     probe_map = {
         i: sorted(
-            range(n_centroids), key=lambda j: (_fold_d2(cf[i], cf[j]), j)
+            range(n_centroids), key=lambda j: (V.fold_sq_l2(cf[i], cf[j]), j)
         )[:nprobe]
         for i in range(n_centroids)
     }
@@ -305,23 +255,13 @@ def ivf_topk(
     )
 
 
-def _duck_fold_d2(a: str, b: str) -> str:
-    """Squared-L2 left fold (no sqrt) — bit-identical to _fold_d2 and
-    the engine's aggregate(zip_with) fold."""
-    return (
-        f"list_sum(list_transform(generate_series(1, len({a})), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) "
-        f"* (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))))"
-    )
-
-
 def _ff_head_ctes(n_centroids: int = 16, sample_n: int = 512) -> list[str]:
     """CTE fragments replaying the fold-exact farthest-first traversal
     over the first-`sample_n` sample, ending with `cents`
     (cidx, vec_id, embedding) — shared by the IVF and SemDeDup
-    oracles (both engines pick centroids with _ff_foldexact over the
-    same sample, so one replay serves both)."""
-    d2 = _duck_fold_d2
+    oracles (both engines pick centroids with vector.farthest_first
+    over the same sample, so one replay serves both)."""
+    d2 = V.duck_sq_l2
     parts = [
         f"""samp AS MATERIALIZED (
   SELECT vec_id, embedding,
@@ -366,7 +306,7 @@ def _assign_ctes() -> list[str]:
     """CTE fragments for the fold-exact nearest-centroid assignment
     (`ad`, then `asg` with the squared-norm fold) — the replay of
     _assign_centroids' argmin-with-lowest-cidx-tie-break."""
-    d2 = _duck_fold_d2
+    d2 = V.duck_sq_l2
     return [
         f"""ad AS (
   SELECT e.vec_id, e.embedding, c.cidx,
@@ -375,12 +315,10 @@ def _assign_ctes() -> list[str]:
                                      c.cidx ASC) AS rn
   FROM embeddings e, cents c
 )""",
-        """asg AS MATERIALIZED (
+        f"""asg AS MATERIALIZED (
   SELECT vec_id,
          embedding,
-         list_sum(list_transform(generate_series(1, len(embedding)),
-           i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
-           AS sq,
+         {V.duck_sq_norm('embedding')} AS sq,
          cidx AS bucket
   FROM ad WHERE rn = 1
 )""",
@@ -399,7 +337,7 @@ def _ivf_oracle_ctes(
     replayed: the oracle IS the exact top-k within probed buckets,
     which the engine's k+3 BLAS prune margin guarantees it returns.
     Ends with `ranked` (vec_id, neighbor, sim, rn)."""
-    d2 = _duck_fold_d2
+    d2 = V.duck_sq_l2
     parts = _ff_head_ctes(n_centroids, sample_n)
     parts.append(
         f"""pd AS (
@@ -412,10 +350,7 @@ def _ivf_oracle_ctes(
     )
     parts.append(f"probes AS (SELECT bucket, probe FROM pd WHERE rn <= {nprobe})")
     parts.extend(_assign_ctes())
-    dot = (
-        "list_sum(list_transform(generate_series(1, len(q.embedding)), "
-        "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(m.embedding[i] AS DOUBLE)))"
-    )
+    dot = V.duck_dot("q.embedding", "m.embedding")
     parts.append(
         f"""scored AS MATERIALIZED (
   SELECT q.vec_id, m.vec_id AS neighbor,
@@ -663,10 +598,7 @@ def _semdedup_oracle(t: float = 0.96) -> str:
     time — a row-wise iteration, so (unlike the unrolled chains) its
     depth costs nothing at plan time."""
     head = ",\n".join(_ff_head_ctes() + _assign_ctes())
-    dot = (
-        "list_sum(list_transform(generate_series(1, len(a.embedding)), "
-        "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
-    )
+    dot = V.duck_dot("a.embedding", "b.embedding")
     cond = (
         "COALESCE((SELECT MAX(pc.cos) FROM pc "
         "WHERE pc.cluster = r.cluster AND pc.id_a = r.vec_id "
@@ -723,21 +655,22 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster and kept/dropped verdict.
 
     Hash-checked since round 6 (was rows-only): centroids come from
-    the same fold-exact traversal as the IVF index (_ff_foldexact
-    over the first-512 sample — one SQL replay serves both), and the
-    greedy pass runs FOLD-EXACT too: squared norms and dot products
-    accumulate dim by dim (an elementwise += over the axis IS a left
-    fold per element), cosine = dot / (sqrt(sq_a) * sqrt(sq_b)) in
-    that exact expression order — bit-identical to the oracle's
-    list_sum folds, so every keep/drop decision replays in DuckDB's
-    recursive-CTE greedy (_semdedup_oracle)."""
+    the same fold-exact traversal as the IVF index
+    (vector.farthest_first over the first-512 sample — one SQL replay
+    serves both), and the greedy pass runs FOLD-EXACT too: squared
+    norms and dot products accumulate dim by dim (an elementwise +=
+    over the axis IS a left fold per element), cosine =
+    dot / (sqrt(sq_a) * sqrt(sq_b)) in that exact expression order —
+    bit-identical to the oracle's list_sum folds, so every keep/drop
+    decision replays in DuckDB's recursive-CTE greedy
+    (_semdedup_oracle)."""
     import pandas as pd
 
     e = load(spark, sf_dir, "embeddings")
     sample = e.orderBy("vec_id").limit(512).collect()
     Xf = [[float(v) for v in r["embedding"]] for r in sample]
     X = np.array(Xf, dtype=np.float64)
-    cidx = _ff_foldexact(Xf, SEMDEDUP_CLUSTERS)
+    cidx, _ = V.farthest_first(Xf, SEMDEDUP_CLUSTERS)
     data = _assign_centroids(e, X[cidx], "cluster")
     t = SEMDEDUP_THRESHOLD
 

@@ -276,24 +276,33 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), f"dms_stats_db_{os.getpid()}"
     )
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{db_loc}'")
-    # rowCount surfaces in logical-plan Statistics only under CBO
-    spark.conf.set("spark.sql.cbo.enabled", "true")
     sfx = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
     out = []
-    for tbl in ("nation", "region"):
-        name = f"{db}.{tbl}_s{sfx}"
-        if not spark.catalog.tableExists(name):
-            path = scratch_dir(prefix=f"dms_stats_{tbl}_")
-            load(spark, sf_dir, tbl).write.mode("overwrite").option(
-                "path", path
-            ).saveAsTable(name)
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
-        # the stats CBO actually sees: logical plan rowCount
-        stats = spark.table(name)._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        row_count = int(str(rc.get())) if rc.isDefined() else -1
-        exact = load(spark, sf_dir, tbl).count()
-        out.append((tbl, exact, row_count == exact))
+    # rowCount surfaces in logical-plan Statistics only under CBO; the
+    # stats reads below are eager, so the caller's setting comes back
+    cbo_key = "spark.sql.cbo.enabled"
+    saved = spark.conf.get(cbo_key, None)
+    spark.conf.set(cbo_key, "true")
+    try:
+        for tbl in ("nation", "region"):
+            name = f"{db}.{tbl}_s{sfx}"
+            if not spark.catalog.tableExists(name):
+                path = scratch_dir(prefix=f"dms_stats_{tbl}_")
+                load(spark, sf_dir, tbl).write.mode("overwrite").option(
+                    "path", path
+                ).saveAsTable(name)
+            spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
+            # the stats CBO actually sees: logical plan rowCount
+            plan = spark.table(name)._jdf.queryExecution().optimizedPlan()
+            rc = plan.stats().rowCount()
+            row_count = int(str(rc.get())) if rc.isDefined() else -1
+            exact = load(spark, sf_dir, tbl).count()
+            out.append((tbl, exact, row_count == exact))
+    finally:
+        if saved is None:
+            spark.conf.unset(cbo_key)
+        else:
+            spark.conf.set(cbo_key, saved)
     return spark.createDataFrame(
         out, "table_name string, n_rows bigint, stats_ok boolean"
     )

@@ -37,6 +37,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
+
 # Corpus sizes (rows x dim x 8 bytes) up to ~2 GB use broadcast_blas.
 BROADCAST_BLAS_MAX_BYTES = 2 << 30
 
@@ -381,7 +383,7 @@ def portable_simhash_bands(
 ) -> DataFrame:
     """(vec_id, band_id, sig) band signatures from the portable
     Rademacher planes, computed entirely JVM-side: each projection is
-    aggregate(zip_with(embedding, plane, *), +) — a strict left fold,
+    the fold-exact dot with the plane (functions/vector),
     bit-identical to DuckDB's list_sum replay (duck_simhash_sigs), so
     the banded candidate set is hash-checkable. Same output contract
     as simhash_bands (the numpy/gaussian production tier kept for the
@@ -395,18 +397,14 @@ def portable_simhash_bands(
     # F.lit round-trips plus fold combinators), ~3-4 s of pure driver
     # time per query construction at sf-any (guide §5: driver work).
     # The expression tree Catalyst sees is semantically identical —
-    # same strict left fold (zip_with multiply, aggregate add), same
-    # 0.0D init, same +-1.0D plane literals (exact round-trip), same
+    # same strict left fold, same +-1.0D plane literals, same
     # CASE/bit-weight sig assembly — so signatures are bit-identical
-    # and the DuckDB replay (duck_simhash_sigs) is untouched.
+    # and match the DuckDB replay (duck_simhash_sigs).
     def proj_sql(p: int) -> str:
         plane = "array(" + ", ".join(
             ("1.0D" if v > 0 else "-1.0D") for v in planes[p]
         ) + ")"
-        return (
-            "aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>), "
-            f"{plane}, (x, w) -> x * w), 0.0D, (s, v) -> s + v)"
-        )
+        return V.dot_sql("embedding", plane)
 
     def sig_sql(b: int) -> str:
         terms = " + ".join(
@@ -446,10 +444,7 @@ def duck_simhash_sigs(
 
     def proj(p: int) -> str:
         lits = ", ".join(f"CAST({v!r} AS DOUBLE)" for v in planes[p])
-        return (
-            f"list_sum(list_transform(generate_series(1, {dim}), "
-            f"i -> CAST({emb_expr}[i] AS DOUBLE) * ([{lits}])[i]))"
-        )
+        return V.duck_dot(emb_expr, f"([{lits}])")
 
     sigs = []
     for b in range(bands):

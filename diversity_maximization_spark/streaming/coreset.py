@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.vector import fold_sq_l2
 from ..registry import query
 from ..scratch import scratch_dir
 from ..sources import load
@@ -55,8 +56,8 @@ STATE_SCHEMA = "seq int, payload string"
 REPLAY_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 
 
-def _dist(a, b) -> float:
-    return math.sqrt(sum((x - y) * (x - y) for x, y in zip(a, b)))
+def _l2(a, b) -> float:
+    return math.sqrt(fold_sq_l2(a, b))
 
 
 def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
@@ -68,7 +69,7 @@ def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
     if not centers:
         centers.append([vec_id, vec, w])
         return
-    dists = [_dist(vec, c[1]) for c in centers]
+    dists = [_l2(vec, c[1]) for c in centers]
     dmin = min(dists)
     if dmin <= state["tau"]:
         centers[min(range(len(dists)), key=lambda i: (dists[i], i))][2] += w
@@ -83,7 +84,7 @@ def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
     # floored at the closest pair — data-driven, monotone).
     while len(centers) > KPRIME:
         pair_min = min(
-            _dist(a[1], b[1])
+            _l2(a[1], b[1])
             for i, a in enumerate(centers)
             for b in centers[i + 1 :]
         )
@@ -91,13 +92,13 @@ def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
         kept: list = []
         dropped: list = []
         for c in centers:
-            if all(_dist(c[1], kc[1]) > state["tau"] for kc in kept):
+            if all(_l2(c[1], kc[1]) > state["tau"] for kc in kept):
                 kept.append(c)
             else:
                 dropped.append(c)
         for c in dropped:
             tgt = min(
-                range(len(kept)), key=lambda i: (_dist(c[1], kept[i][1]), i)
+                range(len(kept)), key=lambda i: (_l2(c[1], kept[i][1]), i)
             )
             kept[tgt][2] += c[2]
         centers = kept
@@ -446,7 +447,7 @@ def fold_matroid_point(
     if not centers:
         centers.append([vec_id, vec, label, {}])
         return
-    dists = [_dist(vec, c[1]) for c in centers]
+    dists = [_l2(vec, c[1]) for c in centers]
     dmin = min(dists)
     if dmin <= state["tau"]:
         c = centers[min(range(len(dists)), key=lambda i: (dists[i], i))]
@@ -457,7 +458,7 @@ def fold_matroid_point(
     centers.append([vec_id, vec, label, {}])
     while len(centers) > KPRIME:
         pair_min = min(
-            _dist(a[1], b[1])
+            _l2(a[1], b[1])
             for i, a in enumerate(centers)
             for b in centers[i + 1 :]
         )
@@ -465,13 +466,13 @@ def fold_matroid_point(
         kept: list = []
         dropped: list = []
         for c in centers:
-            if all(_dist(c[1], kc[1]) > state["tau"] for kc in kept):
+            if all(_l2(c[1], kc[1]) > state["tau"] for kc in kept):
                 kept.append(c)
             else:
                 dropped.append(c)
         for c in dropped:
             tgt = kept[
-                min(range(len(kept)), key=lambda i: (_dist(c[1], kept[i][1]), i))
+                min(range(len(kept)), key=lambda i: (_l2(c[1], kept[i][1]), i))
             ]
             # the dropped center itself becomes a delegate of its label
             merged = dict(c[3])

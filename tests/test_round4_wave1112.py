@@ -119,8 +119,8 @@ def test_bm25_scores_positive_and_bounded(spark, sf_dir):
 def test_facility_location_refuses_uncoreseted_corpus(spark):
     """The kernel's n^2 pair table is only sound on a coreset: inputs
     above FL_MAX_POINTS must be refused with a pointer to the coreset
-    path, never silently broadcast (the guard costs one column-pruned
-    count up front)."""
+    path, never silently broadcast (the guard is one aggregate up
+    front)."""
     import pytest
 
     from diversity_maximization_spark.llm.decontam import (

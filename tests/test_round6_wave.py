@@ -106,10 +106,7 @@ def test_portable_lsh_subset_of_exact(spark, sf_dir):
 
 
 def test_semdedup_greedy_invariants(spark, sf_dir):
-    from diversity_maximization_spark.llm.simsearch import (
-        SEMDEDUP_THRESHOLD,
-        _fold_d2,
-    )
+    from diversity_maximization_spark.llm.simsearch import SEMDEDUP_THRESHOLD
 
     rows = QUERIES["dedup_semdedup"](spark, sf_dir).collect()
     n = load(spark, sf_dir, "embeddings").count()
@@ -125,17 +122,17 @@ def test_semdedup_local_replay(spark, sf_dir):
     """Driver-side replay of the fold-exact greedy must reproduce the
     engine's kept set exactly (bit-identical decisions, not just
     approximately equal)."""
+    from diversity_maximization_spark.functions.vector import farthest_first
     from diversity_maximization_spark.llm.simsearch import (
         SEMDEDUP_CLUSTERS,
         SEMDEDUP_THRESHOLD,
         _assign_centroids,
-        _ff_foldexact,
     )
 
     e = load(spark, sf_dir, "embeddings")
     sample = e.orderBy("vec_id").limit(512).collect()
     Xf = [[float(v) for v in r["embedding"]] for r in sample]
-    cidx = _ff_foldexact(Xf, SEMDEDUP_CLUSTERS)
+    cidx, _ = farthest_first(Xf, SEMDEDUP_CLUSTERS)
     X = np.array(Xf, dtype=np.float64)
     assigned = (
         _assign_centroids(e, X[cidx], "cluster")
