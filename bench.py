@@ -194,7 +194,7 @@ def main() -> None:
     # bench at a lower $SPARK_GRAFT_CPUS to measure core scaling, but
     # every sf0.1 fixture is a single parquet row group (one task per
     # scan) and the headline queries are sub-second, so their 8-vs-32
-    # ratios sit at ~1.0 by construction (PERF_r10 scaling block).
+    # ratios sit at ~1.0 by construction (measured at ~1.0 in round 10).
     # These two probes give the scaling measurement something that CAN
     # scale: a generated multi-task CPU aggregate (defaultParallelism
     # range tasks, no I/O) and a generated real shuffle (50M rows into

@@ -817,7 +817,7 @@ def div_matroid_transversal_exhaustive(
     12-point seeded subset — the hash-checked companion of
     div_matroid_transversal (whose coreset-fed local search under a
     10-topic matroid is a driver kernel no SQL can replay; see
-    NEVER_SAMPLED.md). Both engines enumerate outright: every
+    ROWS_ONLY.md). Both engines enumerate outright: every
     4-subset of the 12 candidates (C(12,4) = 495 bitmasks),
     independence decided by Hall's theorem over ALL non-empty
     sub-subsets (|∪topics(T)| >= |T| for every T — exactly "a system

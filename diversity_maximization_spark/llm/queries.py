@@ -242,7 +242,7 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQUARING in scaled-integer arithmetic (8 squarings = M^256, then
     one matvec with the ones vector) -- a recurrence both engines
     replay bit-for-bit, closing (for the dominant direction) the gap
-    NEVER_SAMPLED.md documents for embed_pca's LAPACK eigensolve.
+    ROWS_ONLY.md documents for embed_pca's LAPACK eigensolve.
     Squaring beats the classic per-vector iteration here twice over:
     log-depth (8 rounds reach the amplification 256 sequential matvec
     rounds would) and a shorter oracle chain.

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..scratch import scratch_dir
+from ..scratch import register_scratch, scratch_dir
 from ..sources import load
 
 
@@ -269,11 +269,10 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are worse than none, hence the exactness flag."""
     import hashlib
     import os
-    import tempfile
 
     db = "dms_stats"
-    db_loc = os.path.join(
-        tempfile.gettempdir(), f"dms_stats_db_{os.getpid()}"
+    db_loc = register_scratch(
+        os.path.join(tempfile.gettempdir(), f"dms_stats_db_{os.getpid()}")
     )
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{db_loc}'")
     sfx = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]

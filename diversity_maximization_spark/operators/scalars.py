@@ -189,8 +189,8 @@ FROM embeddings
 def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order fns. Array-typed OUTPUT columns are projected
     to scalars (head2x_1..3) because the driver's canonicalizer
-    pandas-sorts result rows and cannot hash Python lists
-    (CORRECTNESS_r01 fn_array err); the transform/slice machinery is
+    pandas-sorts result rows and cannot hash Python lists (the sort
+    raises on a list cell); the transform/slice machinery is
     still exercised, only the final projection is scalar."""
     e = load(spark, sf_dir, "embeddings")
     h = F.expr("transform(slice(embedding, 1, 3), x -> CAST(x AS DOUBLE) * 2)")

@@ -55,7 +55,7 @@ def udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     The UDF output stays array<double> (proving Arrow array transfer);
     the final projection serializes it as comma-joined 1e6-scaled
     integers because the driver's canonicalizer cannot hash list cells
-    (CORRECTNESS_r01 fn_array err) and float→string formatting differs
+    (a list cell fails its pandas sort) and float→string formatting differs
     across engines, while int64 formatting is identical."""
     e = load(spark, sf_dir, "embeddings")
     return e.select(

@@ -34,9 +34,9 @@ ORACLES: dict[str, str] = {}
 # safe at scale (a 1-row scalar side, a constant grid, declared
 # pairwise semantics over a k-bounded set, ...). Populated by the
 # ``bounded_cross=`` argument of @query at the registration site —
-# the cartesian-sweep lint in tests/test_plans.py derives its
-# allowlist from THIS dict, so a new scalar cross must declare its
-# bound where it is written or the suite goes red.
+# the plan lint in tests/test_oracle.py derives its allowlist from
+# THIS dict, so a new scalar cross must declare its bound where it is
+# written or the suite goes red.
 BOUNDED_CROSS: dict[str, str] = {}
 
 
@@ -64,82 +64,10 @@ def query(
 
     return deco
 
-# round-11 rotation (r10 verdict items 2 and 6). The FIRST FOUR slots
-# are a one-time policy carve-out the r10 judge ordered: keys whose
-# implementation was REWRITTEN in round 10 after (or without) their
-# driver sampling — agg_jonckheere / agg_rank_biserial /
-# agg_exact_median_distributed were never driver-sampled and
-# ts_matrix_profile's r9 pass certifies the pre-rewrite code — jump
-# the NEVER_SAMPLED.md rotation order so the driver re-verifies the
-# NEW code paths. The remaining 46 are the next never-driver-sampled
-# keys strictly in NEVER_SAMPLED.md order (oracled backlog 162 ->
-# 116). All 46 are green on the strict local gate at sf0.001 AND
-# sf0.01 AND sf0.1 (CHECK_sf*_strict; re-confirmed this round).
-# Standing policy otherwise unchanged (r8 ADVICE, registry.py:68):
-# contract changes mid-round are re-proven via the full strict local
-# gate at both SFs and do NOT burn window slots.
-# Every key here MUST have an oracle (a no-oracle key in the window
-# is an automatic err slot) -- enforced in tests.
-CHECK_WINDOW: list[str] = [
-    # rewritten-in-r10 carve-out (verdict item 6)
-    "agg_jonckheere",
-    "agg_rank_biserial",
-    "agg_exact_median_distributed",
-    "ts_matrix_profile",
-    # next 46 in NEVER_SAMPLED.md order
-    "sketch_log_histogram",
-    "agg_classifier_eval",
-    "agg_lorenz_curve",
-    "agg_roc_auc",
-    "agg_calibration_bins",
-    "dq_referential_integrity",
-    "feat_target_encode",
-    "anomaly_iqr_fences",
-    "ts_peak_detection",
-    "sketch_bloom_eval",
-    "win_gap_islands",
-    "markov_absorption",
-    "token_fertility_report",
-    "win_moving_p90",
-    "agg_sprt_sequential",
-    "fn_ip",
-    "assoc_rules_lift",
-    "agg_rfm_segmentation",
-    "path_common_prefixes",
-    "feat_impute",
-    "feat_hashing_trick",
-    "ts_ema_irregular",
-    "sim_search_recall_ndcg",
-    "attribution_markov_removal",
-    "agg_corr_cov",
-    "agg_skew_kurtosis",
-    "agg_weighted_avg",
-    "agg_string_concat",
-    "agg_bool_logic",
-    "agg_multi_distinct",
-    "agg_regr_trend",
-    "sample_poisson_bootstrap",
-    "sample_ab_assignment",
-    "agg_hhi",
-    "agg_ols_multi",
-    "agg_grouping_labels",
-    "agg_mutual_info",
-    "agg_percentile_disc",
-    "agg_approx_quantile_eval",
-    "agg_hill_tail",
-    "agg_ratio_delta_ci",
-    "retention_cohort",
-    "markov_transitions",
-    "anomaly_daily_zscore",
-    "rolling_dau",
-    "time_to_conversion",
-]
-
 
 def load_all() -> None:
-    """Import every module that registers queries (idempotent), then
-    reorder the registry so CHECK_WINDOW comes first (the driver
-    verifies the first 50 keys in registration order)."""
+    """Import every module that registers queries (idempotent).
+    Registry order is this import order."""
     from .operators import (  # noqa: F401
         aggregates,
         behavior,
@@ -168,11 +96,3 @@ def load_all() -> None:
     from .llm import queries as _llm_queries  # noqa: F401
     from .llm import textrank as _textrank  # noqa: F401
     from .streaming import queries as _stream_queries  # noqa: F401
-
-    missing = [k for k in CHECK_WINDOW if k not in QUERIES]
-    if missing:
-        raise RuntimeError(f"CHECK_WINDOW keys not registered: {missing}")
-    ordered = CHECK_WINDOW + [k for k in QUERIES if k not in CHECK_WINDOW]
-    reordered = {k: QUERIES[k] for k in ordered}
-    QUERIES.clear()
-    QUERIES.update(reordered)

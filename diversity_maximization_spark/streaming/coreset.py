@@ -378,8 +378,8 @@ def stream_coreset_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     GEOMETRY, which stays pinned by the radius/cardinality invariant
     tests and the batch-boundary-independence hash gates in
     tests/test_streaming.py (the fold itself is not SQL-expressible —
-    its overflow re-merge loop is data-dependent; see NEVER_SAMPLED.md
-    for the measured infeasibility precedent)."""
+    its overflow re-merge loop is data-dependent, so no bounded SQL
+    unroll replays it; see ROWS_ONLY.md)."""
     snaps = streaming_coreset_snapshots(spark, sf_dir)
     return (
         snaps.groupBy(F.col("seq").cast("int").alias("seq"))

@@ -166,8 +166,8 @@ def stream_events(
     every micro-batch pays a fixed WAL-commit + offset-log + listing +
     per-partition state-store-commit overhead, measured at 130-160 ms
     plus an addBatch floor per batch at sf0.01, so halving the batch
-    count nearly halves the replay cost). Result-invariance argument,
-    key by key in OPTIMIZATION_r11.md: coarsening adjacent time-ordered
+    count nearly halves the replay cost). Why no key's result moves,
+    for every key on this reader: coarsening adjacent time-ordered
     slices only makes the watermark lag MORE conservative (state lives
     longer, late-drops can only decrease — and every oracle already
     matches the no-drop batch answer), and the order-sensitive pandas

@@ -1,12 +1,15 @@
 """Operator contracts on edge inputs: facility location's local and
 distributed tiers agree (or refuse alike), and operators leave the
-caller's session configuration as they found it."""
+caller's session configuration and temp dir as they found it."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
-from diversity_maximization_spark import api
+from diversity_maximization_spark import api, scratch
 from diversity_maximization_spark.registry import QUERIES
 
 _POINTS = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]), (3, [2.0, 0.5])]
@@ -59,3 +62,9 @@ def test_catalog_analyze_stats_restores_cbo(spark, sf_dir):
     before = spark.conf.get(key)
     QUERIES["catalog_analyze_stats"](spark, sf_dir).collect()
     assert spark.conf.get(key) == before
+
+
+def test_catalog_analyze_stats_registers_its_database_dir(spark, sf_dir):
+    db_loc = os.path.join(tempfile.gettempdir(), f"dms_stats_db_{os.getpid()}")
+    QUERIES["catalog_analyze_stats"](spark, sf_dir).collect()
+    assert db_loc in scratch._SCRATCH

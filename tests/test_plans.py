@@ -151,33 +151,6 @@ def test_sink_partition_prune_reads_two_dirs(spark, sf_dir):
     assert "event_type" in inside, plan
 
 
-def test_no_accidental_cartesian_or_nested_loop(spark, sf_dir):
-    """Scale guard: no relational query may compile to
-    CartesianProduct or BroadcastNestedLoopJoin unless it is an
-    INTENTIONAL pairwise/cross operator. Catching a missing equi
-    condition here is cheaper than at 100 TB.
-
-    The allowlist is NOT hand-maintained here: it is derived from the
-    ``bounded_cross=`` declarations made at each @query registration
-    site (registry.BOUNDED_CROSS), so a new scalar cross must state
-    its domain bound where it is written or this sweep goes red."""
-    from diversity_maximization_spark.registry import BOUNDED_CROSS, ORACLES
-
-    intentional = set(BOUNDED_CROSS)
-    families = ("tpch_", "join_", "agg_", "win_", "setop_", "sort_",
-                "topk_", "merge_", "ts_", "sql_", "fn_", "filter_",
-                "proj_")
-    flagged = []
-    for key in ORACLES:
-        if key in intentional or not key.startswith(families):
-            continue
-        plan = plan_of(spark, key, sf_dir)
-        for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-            if bad in plan:
-                flagged.append((key, bad))
-    assert flagged == [], f"unintended pair-blowup joins: {flagged}"
-
-
 def test_bounded_cross_declarations_are_wellformed():
     """Every bounded_cross declaration names a registered key and
     states a non-trivial bound (the lint's allowlist is only as good

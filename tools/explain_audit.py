@@ -1,14 +1,18 @@
-"""Dump the executed physical plans of the headline queries to
-PLANS.md — the scale-review artifact: shows which operators broadcast,
-what gets pushed into the parquet scan, where exchanges happen, and
-which spans are whole-stage-codegen'd. Run after any plan-affecting
-change:
+"""Dump executed physical plans (AQE final plans, after a collect).
 
-    python tools/explain_audit.py [sf_dir]
+With no keys, regenerates PLANS.md for the headline KEYS — the
+scale-review artifact: shows which operators broadcast, what gets
+pushed into the parquet scan, where exchanges happen, and which spans
+are whole-stage-codegen'd. Run after any plan-affecting change. With
+keys, prints those keys' plans to stdout instead (redirect it to
+compare a plan before and after a change):
+
+    python tools/explain_audit.py [--sf 0.01] [key ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 
 sys.path.insert(0, ".")
@@ -94,10 +98,39 @@ KEYS = [
 ]
 
 
+def plan_section(spark, key: str, sf_dir: str) -> list[str]:
+    """Markdown for one key: the executed plan tree, then its scan
+    pushdown lines."""
+    df = registry.QUERIES[key](spark, sf_dir)
+    df.collect()
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    # keep the tree + scan details; drop the verbose per-node I/O lists
+    tree = plan.split("\n\n(1)")[0]
+    scans = "\n".join(
+        line
+        for line in plan.splitlines()
+        if line.startswith(("PushedFilters:", "ReadSchema:"))
+    )
+    out = [f"## {key}", "", "```", tree.rstrip(), "```", ""]
+    if scans:
+        out += ["```", scans, "```", ""]
+    return out
+
+
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf", default="0.01")
+    ap.add_argument("keys", nargs="*")
+    args = ap.parse_args()
+    sf_dir = f"/root/testdata/sf{args.sf}"
     spark = get_spark("plan-audit")
     registry.load_all()
+    if args.keys:
+        for key in args.keys:
+            print("\n".join(plan_section(spark, key, sf_dir)))
+        return
     out = [
         "# PLANS — executed physical plans of the headline queries",
         "",
@@ -251,21 +284,7 @@ def main() -> None:
         "",
     ]
     for key in KEYS:
-        df = registry.QUERIES[key](spark, sf_dir)
-        df.collect()
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        # keep the tree + scan details; drop the verbose per-node I/O lists
-        tree = plan.split("\n\n(1)")[0]
-        scans = "\n".join(
-            line
-            for line in plan.splitlines()
-            if line.startswith(("PushedFilters:", "ReadSchema:"))
-        )
-        out += [f"## {key}", "", "```", tree.rstrip(), "```", ""]
-        if scans:
-            out += ["```", scans, "```", ""]
+        out += plan_section(spark, key, sf_dir)
     # preserve everything below the manual-sections marker (scaling
     # slopes, per-round plan notes) — the generated plan dump only
     # owns the top of the file
