@@ -98,6 +98,29 @@ def time_anchors(state) -> dict[str, float]:
     return anchors
 
 
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM (codegen + JIT paths for agg/sort/window), the
+    Python worker pool (Arrow serde), and the parquet footer cache —
+    BASELINE.md's budget is defined on steady-state job time, and
+    the first jobs of a session otherwise pay one-off JIT costs."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    df = spark.createDataFrame(
+        [(i, float(i), [float(i)] * 4) for i in range(1000)],
+        "id bigint, v double, vec array<double>",
+    )
+    df.groupBy((df.id % 7).alias("g")).agg({"v": "sum"}).collect()
+    df.orderBy(df.v.desc()).limit(3).collect()
+    df.mapInPandas(lambda it: it, "id bigint, v double, vec array<double>").count()
+    df.selectExpr(
+        "aggregate(zip_with(vec, vec, (x, y) -> x * y), 0D, (s, t) -> s + t)"
+    ).collect()
+    # Parquet datasource init (Hadoop FS classes, footer reader, scan
+    # codegen) is a one-off ~2-3 s cost paid by the first file scan of
+    # the session; warm it on the 5-row region table so the first
+    # timed query measures steady-state scan time.
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).collect()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
@@ -110,26 +133,7 @@ def main() -> None:
 
     registry.load_all()
 
-    # Warm the JVM (codegen + JIT paths for agg/sort/window), the
-    # Python worker pool (Arrow serde), and the parquet footer cache —
-    # BASELINE.md's budget is defined on steady-state job time, and
-    # the first jobs of a session otherwise pay one-off JIT costs.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = spark.createDataFrame(
-        [(i, float(i), [float(i)] * 4) for i in range(1000)],
-        "id bigint, v double, vec array<double>",
-    )
-    warm.groupBy((warm.id % 7).alias("g")).agg({"v": "sum"}).collect()
-    warm.orderBy(warm.v.desc()).limit(3).collect()
-    warm.mapInPandas(lambda it: it, "id bigint, v double, vec array<double>").count()
-    warm.selectExpr(
-        "aggregate(zip_with(vec, vec, (x, y) -> x * y), 0D, (s, t) -> s + t)"
-    ).collect()
-    # Parquet datasource init (Hadoop FS classes, footer reader, scan
-    # codegen) is a one-off ~2-3 s cost paid by the first file scan of
-    # the session; warm it on the 5-row region table so the first
-    # timed query measures steady-state scan time.
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).collect()
+    warm(spark, sf_dir)
 
     load_before = os.getloadavg()
     astate = _anchor_state(spark, sf_dir)

@@ -6,10 +6,12 @@ Two mechanisms, one per place distances are computed:
 
 - **Kernel-side** (numpy inside the driver or an ``applyInPandas``
   task): a process-local counter the kernels bump. Inside executor
-  tasks the count is task-local; callers that need a global number
-  fold it into their task output (the MapReduce-coreset kernel
-  returns its count as a column) — same pattern as the reference's
-  per-worker counters merged at the end of a run.
+  tasks the count stays in the Python worker and is lost: no kernel
+  reports it back, so ``KERNEL_DISTANCE_EVALS`` counts the driver-side
+  kernel calls only (the sequential finish and the evaluation, not
+  the per-partition MapReduce-coreset kernel). Executor-side counts
+  are open work: ROADMAP.md, "Count the paper's costs where they are
+  spent".
 - **Plan-side** (DataFrame self-join evaluators): ``observe()``
   metrics — Spark counts the pair rows that flow through the
   distance expression during the normal action, no extra job.

@@ -11,8 +11,10 @@ each rung, and reports the fitted log-log slope
 
 between consecutive rungs and across the whole ladder. A linear plan
 shows alpha ~= 1 (plus a constant job floor that DEFLATES the slope at
-small t); a quadratic plan shows alpha -> 2 as n grows. Results land in
-PLANS.md ("Scaling slopes") and .tmp/scale_ladder.json.
+small t); a quadratic plan shows alpha -> 2 as n grows. t is the
+``key`` span of ``profile_sweep.profile_key`` (construction plus noop
+execution), after one untimed run at the smallest rung. Results are
+written as JSON to --out (default .tmp/scale_ladder.json).
 
 Probed keys (the round-5 verdict's list):
 
@@ -70,15 +72,11 @@ import argparse
 import json
 import math
 import os
-import shutil
-import sys
-import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-
-sys.path.insert(0, ".")
+from profile_sweep import Profiler
 
 BASE_EMB = 2_000  # sf0.1 embeddings rows
 BASE_DOC = 6_000  # ~sf0.1 documents rows (5 000), rounded for clean 10x
@@ -317,44 +315,75 @@ def gen_rung(
     )
 
 
-def run_key(spark, key: str, rung_dir: str, n_doc: int) -> float:
+def key_build(spark, key: str, rung_dir: str, n_doc: int):
+    """The callable the profiler builds ``key`` with on one rung."""
     from diversity_maximization_spark import registry
-    from diversity_maximization_spark.operators.graph import (
-        _scc_pointer_doubling,
+
+    if key == "graph_scc":
+        from diversity_maximization_spark.operators.graph import (
+            _scc_pointer_doubling,
+        )
+        from diversity_maximization_spark.sources import load
+
+        return lambda: _scc_pointer_doubling(
+            load(spark, rung_dir, "documents"), n_doc
+        )
+    if key == "sim_search_lsh_probe":
+        return lambda: _lsh_probe(spark, rung_dir)
+    return lambda: registry.QUERIES[key](spark, rung_dir)
+
+
+def _lsh_probe(spark, rung_dir: str):
+    """The no-broadcast LSH tier, forced regardless of corpus size:
+    the 100 TB scale path whose slope must stay ~linear."""
+    from diversity_maximization_spark.functions import vector as V
+    from diversity_maximization_spark.plans.distance_join import (
+        lsh_candidate_pairs,
     )
     from diversity_maximization_spark.sources import load
+    from pyspark.sql import functions as SF
 
-    t0 = time.time()
-    if key == "graph_scc":
-        d = load(spark, rung_dir, "documents")
-        _scc_pointer_doubling(d, n_doc).count()
-    elif key == "sim_search_lsh_probe":
-        # force the no-broadcast LSH tier regardless of corpus size:
-        # the 100 TB scale path whose slope must stay ~linear
-        from diversity_maximization_spark.functions import vector as V
-        from diversity_maximization_spark.plans.distance_join import (
-            lsh_candidate_pairs,
-        )
-        from diversity_maximization_spark.sources import load as _ld
-        from pyspark.sql import functions as SF
+    e = load(spark, rung_dir, "embeddings")
+    cand = lsh_candidate_pairs(e, 64)
+    a = e.select(
+        SF.col("vec_id").alias("vec_a"), SF.col("embedding").alias("ea")
+    )
+    b = e.select(
+        SF.col("vec_id").alias("vec_b"), SF.col("embedding").alias("eb")
+    )
+    return (
+        cand.join(a, "vec_a")
+        .join(b, "vec_b")
+        .withColumn("cs", V.cosine_sim("ea", "eb"))
+        .filter(SF.col("cs") > 0.35)
+    )
 
-        e = _ld(spark, rung_dir, "embeddings")
-        cand = lsh_candidate_pairs(e, 64)
-        a = e.select(
-            SF.col("vec_id").alias("vec_a"), SF.col("embedding").alias("ea")
-        )
-        b = e.select(
-            SF.col("vec_id").alias("vec_b"), SF.col("embedding").alias("eb")
-        )
-        (
-            cand.join(a, "vec_a")
-            .join(b, "vec_b")
-            .withColumn("cs", V.cosine_sim("ea", "eb"))
-            .filter(SF.col("cs") > 0.35)
-        ).count()
-    else:
-        registry.QUERIES[key](spark, rung_dir).count()
-    return time.time() - t0
+
+def ladder(prof: Profiler, key: str, rungs: list[int], ladder_dir: str) -> dict:
+    """Profile ``key`` once per rung, after one untimed run at the
+    smallest rung, and fit the slopes of the ``key`` span seconds."""
+    times: dict[int, float] = {}
+    for i, m in enumerate([rungs[0]] + rungs):
+        build = key_build(prof.spark, key, f"{ladder_dir}/L{m}", BASE_DOC * m)
+        rec = prof.profile(key, build)
+        if "error" in rec:
+            return {"error": rec["error"]}
+        if i:  # the first run only warms the key
+            times[m] = rec["total_s"]
+            print(f"{key} @ {m}x: {times[m]:.2f}s", flush=True)
+
+    def slope(a: int, b: int) -> float:
+        if b <= a:
+            return float("nan")
+        return round(math.log(times[b] / times[a]) / math.log(b / a), 3)
+
+    return {
+        "times_sec": {f"{m}x": times[m] for m in rungs},
+        "slope_overall": slope(rungs[0], rungs[-1]),
+        "slope_segments": {
+            f"{a}x->{b}x": slope(a, b) for a, b in zip(rungs, rungs[1:])
+        },
+    }
 
 
 def main() -> int:
@@ -374,12 +403,6 @@ def main() -> int:
     rungs = [int(x) for x in args.rungs.split(",")]
     keys = args.keys.split(",")
 
-    from diversity_maximization_spark import registry
-    from diversity_maximization_spark.session import get_spark
-
-    registry.load_all()
-    spark = get_spark("dms-scale-ladder")
-
     for m in rungs:
         rd = f"{args.ladder_dir}/L{m}"
         if not (
@@ -391,32 +414,13 @@ def main() -> int:
             gen_rung(rd, m, vocab_size=args.vocab_size)
 
     results: dict[str, dict] = {}
-    for key in keys:
-        # one untimed warm run at the smallest rung (JVM/codegen warm)
-        run_key(spark, key, f"{args.ladder_dir}/L{rungs[0]}", BASE_DOC * rungs[0])
-        times: dict[int, float] = {}
-        for m in rungs:
-            t = run_key(spark, key, f"{args.ladder_dir}/L{m}", BASE_DOC * m)
-            times[m] = round(t, 3)
-            print(f"{key} @ {m}x: {t:.2f}s", flush=True)
-        lo, hi = rungs[0], rungs[-1]
-        slope = (
-            math.log(times[hi] / times[lo]) / math.log(hi / lo)
-            if hi > lo
-            else float("nan")
-        )
-        seg = {
-            f"{a}x->{b}x": round(
-                math.log(times[b] / times[a]) / math.log(b / a), 3
-            )
-            for a, b in zip(rungs, rungs[1:])
-        }
-        results[key] = {
-            "times_sec": {f"{m}x": times[m] for m in rungs},
-            "slope_overall": round(slope, 3),
-            "slope_segments": seg,
-        }
-        print(f"{key}: overall slope {slope:.2f} {seg}", flush=True)
+    prof = Profiler("dms-scale-ladder")
+    try:
+        for key in keys:
+            results[key] = ladder(prof, key, rungs, args.ladder_dir)
+            print(f"{key}: {json.dumps(results[key])}", flush=True)
+    finally:
+        prof.close()
 
     os.makedirs(os.path.dirname(args.out), exist_ok=True)
     with open(args.out, "w") as f:
@@ -430,7 +434,7 @@ def main() -> int:
             indent=1,
         )
     print(f"wrote {args.out}", flush=True)
-    return 0
+    return 1 if any("error" in r for r in results.values()) else 0
 
 
 if __name__ == "__main__":
