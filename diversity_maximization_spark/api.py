@@ -24,9 +24,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .diversity import kernel as K
-from .diversity.coreset import collect_coreset, collect_sorted, mr_coreset
+from .diversity.coreset import collect_coreset, mr_coreset
 from .diversity.gmm import gmm_distributed
 from .diversity.matroid import PartitionMatroid, TransversalMatroid  # noqa: F401
+from .functions.vector import collect_sorted
 from .streaming.coreset import fold_point
 
 
@@ -59,9 +60,11 @@ def gmm(
     spark = df.sparkSession
     if distributed and metric == "euclidean":
         centers = gmm_distributed(df, k, id_col=id_col, vec_col=vec_col)
-        _, ids, dist_when, _ = zip(*centers)
-        return _selection(spark, ids, dist_when, id_col)
+        ids = [c[1] for c in centers]
+        return _selection(spark, ids, [c[2] for c in centers], id_col)
     ids, X = collect_sorted(df, id_col, vec_col)
+    if not len(ids):  # the kernel's k = min(k, n) clamp, at n = 0
+        return _selection(spark, [], [], id_col)
     chosen, dist_when, _ = K.farthest_first(X, k, start=0, metric=metric)
     return _selection(spark, ids[chosen], dist_when, id_col)
 
@@ -105,6 +108,8 @@ def diversity(
     candidate sets are small by construction (SURVEY.md §7
     known-hard #4)."""
     _, X = collect_sorted(df, id_col, vec_col)
+    if not len(X):
+        raise ValueError(f"diversity({objective!r}) of an empty input")
     D = K.pairwise(X, metric)
     fn = {
         "edge": K.eval_edge,

@@ -11,7 +11,8 @@ Plan shape (idiomatic Spark, no RDDs):
              composes by union with other coresets or collects to the
              driver for the sequential finish: unsorted, in one Arrow
              transfer, then sorted by vec_id on the driver
-             (collect_sorted), so the kernel stage runs exactly once.
+             (functions/vector.collect_sorted), so the kernel stage
+             runs exactly once.
 
 The partition key is a hash of the unique id, not repartition()'s
 round-robin: the coreset guarantee needs a random-like assignment
@@ -30,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
 from . import kernel as K
 
 CORESET_SCHEMA = (
@@ -40,18 +42,6 @@ COLUMNS = [
     "part", "vec_id", "label", "is_kernel", "center_rank",
     "dist_to_center", "weight", "embedding",
 ]
-
-
-def _points(pdf: pd.DataFrame) -> np.ndarray:
-    """A partition's embeddings as a float64 (n, d) matrix. A NaN or
-    ±inf coordinate would win farthest-first's argmax and poison every
-    distance, so it is rejected with the offending vec_id."""
-    X = np.stack(pdf["embedding"].map(np.asarray).to_numpy()).astype(np.float64)
-    bad = ~np.isfinite(X).all(axis=1)
-    if bad.any():
-        vid = int(pdf["vec_id"].iloc[int(np.argmax(bad))])
-        raise ValueError(f"non-finite embedding (NaN or inf) at vec_id {vid}")
-    return X
 
 
 def _coreset_frame(pdf, X, idx, is_kernel, rank, dist, weight) -> pd.DataFrame:
@@ -72,7 +62,7 @@ def _coreset_frame(pdf, X, idx, is_kernel, rank, dist, weight) -> pd.DataFrame:
 def _partition_coreset(kprime: int, m: int):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = _points(pdf)
+        X = V.matrix(pdf["embedding"], pdf["vec_id"])
         chosen, _, min_dist, label = K.farthest_first_clusters(X, kprime, start=0)
         k = len(chosen)
         # a center belongs to its own cluster (a duplicate of an earlier
@@ -142,7 +132,7 @@ ASSIGN_SCHEMA = (
 def _partition_assign(kprime: int):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = _points(pdf)
+        X = V.matrix(pdf["embedding"], pdf["vec_id"])
         _, _, min_dist, label = K.farthest_first_clusters(X, kprime, start=0)
         return pd.DataFrame(
             {
@@ -170,31 +160,11 @@ def cluster_assignments(
     )
 
 
-def collect_sorted(df: DataFrame, key: str, vec_col: str, *cols: str):
-    """The driver boundary: one Arrow transfer of the `key`, `vec_col`
-    and `cols` columns, ordered by `key` on the driver with a stable
-    argsort. A Spark orderBy would range-partition first, and the
-    range partitioner's sampling job re-executes the whole upstream
-    plan (for a coreset: the pandas kernel stage). Returns
-    (keys, X, *cols) as numpy arrays; X is the (n, d) float64 matrix
-    of the array column `vec_col`."""
-    t = df.select(key, vec_col, *cols).toArrow()
-    keys = t.column(key).to_numpy()
-    order = np.argsort(keys, kind="stable")
-    vec = t.column(vec_col).combine_chunks()
-    lengths = vec.value_lengths().to_numpy(zero_copy_only=False)
-    if vec.null_count or (lengths != lengths[:1]).any():
-        raise ValueError(f"{vec_col} must hold equal-length, non-NULL arrays")
-    flat = vec.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    X = flat.reshape(len(vec), lengths[0] if len(vec) else 0)
-    return (keys[order], X[order], *(t.column(c).to_numpy()[order] for c in cols))
-
-
 def collect_coreset(coreset_df: DataFrame):
     """Compose (union is implicit — one DataFrame) and materialize the
     coreset on the driver for the sequential finish: returns
     (ids, labels, X, weights) sorted by vec_id."""
-    ids, X, labels, w = collect_sorted(coreset_df, "vec_id", "embedding", "label", "weight")
+    ids, X, labels, w = V.collect_sorted(coreset_df, "vec_id", "embedding", "label", "weight")
     return ids, labels, X, w
 
 
@@ -207,7 +177,7 @@ def _weighted_partition_coreset(kprime: int):
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = _points(pdf)
+        X = V.matrix(pdf["embedding"], pdf["vec_id"])
         chosen, _, _, label = K.farthest_first_clusters(X, kprime, start=0)
         k = len(chosen)
         w_out = np.zeros(k, dtype=np.int64)

@@ -9,7 +9,6 @@ set, which is small by construction (SURVEY.md §7 known-hard #4).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,8 +56,7 @@ def star_value(cand: DataFrame) -> DataFrame:
 
 def tree_cycle_values(cand: DataFrame) -> list[tuple[str, float]]:
     """Driver-side MST / tour weight of the (small) candidate set."""
-    rows = cand.orderBy("vec_id").collect()
-    X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+    _, X = V.collect_sorted(cand, "vec_id", "embedding")
     D = K.pairwise_l2(X)
     return [
         ("tree", round(K.eval_tree(D), 6)),
@@ -70,7 +68,6 @@ def bipartition_value(cand: DataFrame) -> list[tuple[str, float]]:
     """Driver-side remote-bipartition (min balanced cut weight) of the
     (small) candidate set — exhaustive up to 14 points, deterministic
     swap descent beyond (see kernel.eval_bipartition)."""
-    rows = cand.orderBy("vec_id").collect()
-    X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+    _, X = V.collect_sorted(cand, "vec_id", "embedding")
     D = K.pairwise_l2(X)
     return [("bipartition", round(K.eval_bipartition(D), 6))]

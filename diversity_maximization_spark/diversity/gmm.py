@@ -56,14 +56,18 @@ def gmm_distributed(
     Returns a list of (rank, id, dist_when_chosen, vector). Start =
     min id (deterministic); argmax ties broken by min id.
 
-    Batched candidate refill (round-2 perf): each Spark job collects
-    the top-m candidates by current min_d2 instead of just the argmax,
+    Batched candidate refill (round-2 perf): each Spark job pulls the
+    top-m candidates by current min_d2 instead of just the argmax (one
+    ordered-limit job, one Arrow transfer through
+    functions/vector.collect_sorted, rows sorted by id on the driver),
     then greedy selection continues LOCALLY on that sample while it is
-    provably global: every non-collected point has min_d2 <= the m-th
-    collected value (the threshold), and updates only shrink min_d2,
-    so as long as the local pick's refined min_d2 is STRICTLY above
-    the threshold no outside point can beat or tie it (strictness
-    protects the min-id tie-break). Local refinement uses the same
+    provably global. The first pick is the global argmax (the ordered
+    limit keeps the lowest ids among ties). After it, every
+    non-collected point has min_d2 <= the smallest collected value
+    (the threshold), and updates only shrink min_d2, so as long as the
+    local pick's refined min_d2 is STRICTLY above the threshold no
+    outside point can beat or tie it (strictness protects the min-id
+    tie-break). Local refinement uses the same
     sequential-fold arithmetic as the JVM expression, so the chosen
     centers and reported distances are bit-identical to the
     one-center-per-job formulation — A/B-checked in
@@ -71,29 +75,31 @@ def gmm_distributed(
     scheduling floor each locally; a full pass each at cluster scale)
     to ~k/4 jobs in practice."""
     base = df.select(id_col, vec_col)
-    first = base.orderBy(id_col).limit(1).collect()[0]
-    centers = [(0, first[id_col], 0.0, list(first[vec_col]))]
+    ids, X = V.collect_sorted(base.orderBy(id_col).limit(1), id_col, vec_col)
+    if not len(ids):
+        return []  # the local kernel's k = min(k, n) clamp, at n = 0
+    first = X[0].tolist()
+    centers = [(0, ids[0].item(), 0.0, first)]
 
     # A/B at sf0.1/k=16: batch 32 -> 2.2s, 128 -> 1.5s, 512 -> 0.9s
     # (identical centers each time); the collect is ~rows*dim*8 bytes,
     # so 512 x 64-d is 256 KB — the threshold just gets tighter and
     # more picks clear it locally per job.
     m = batch if batch is not None else max(256, 32 * k)
-    cur = base.withColumn(
-        "min_d2", V.sq_l2(vec_col, V.lit_array_sql(first[vec_col]))
-    ).cache()
+    cur = base.withColumn("min_d2", V.sq_l2(vec_col, V.lit_array_sql(first))).cache()
     prev = None
     while len(centers) < k:
         # chosen ids are excluded so duplicate points (min_d2 0 for
         # every remaining row) can never re-select a chosen center —
-        # same tie discipline as the local kernel
-        rows = (
+        # same tie discipline as the local kernel. The ordered limit
+        # selects the m candidates; they arrive sorted by id.
+        ids, X, d2 = V.collect_sorted(
             cur.filter(~F.col(id_col).isin([c[1] for c in centers]))
             .orderBy(F.col("min_d2").desc(), F.col(id_col))
-            .limit(m)
-            .collect()
+            .limit(m),
+            id_col, vec_col, "min_d2",
         )
-        if not rows:
+        if not len(ids):
             # k exceeds the number of distinct points: return what we
             # have, matching the local kernel's k = min(k, n) clamp
             # (ADVICE r01).
@@ -101,33 +107,24 @@ def gmm_distributed(
         # threshold: max possible min_d2 of any non-collected point.
         # If fewer than m rows came back we collected EVERY remaining
         # point and can finish entirely locally.
-        exhaustive = len(rows) < m
-        threshold = float(rows[-1]["min_d2"])
-        cand = [
-            [r[id_col], float(r["min_d2"]), list(r[vec_col])] for r in rows
-        ]
+        exhaustive = len(ids) < m
+        threshold = float(d2.min())
+        cand = [list(c) for c in zip(ids.tolist(), d2.tolist(), X.tolist())]
         new_centers = []
         while len(centers) < k and cand:
             # argmax by refined min_d2, ties by min id (ids are numeric)
             j = max(range(len(cand)), key=lambda i: (cand[i][1], -cand[i][0]))
             cid, cd2, cvec = cand[j]
-            if not exhaustive and not (cd2 > threshold):
+            if new_centers and not exhaustive and not (cd2 > threshold):
                 break  # an uncollected point could beat or tie this pick
-            centers.append(
-                (
-                    len(centers),
-                    cid,
-                    math.sqrt(max(cd2, 0.0)),
-                    cvec,
-                )
-            )
+            centers.append((len(centers), cid, math.sqrt(max(cd2, 0.0)), cvec))
             new_centers.append(cvec)
             del cand[j]
             for c in cand:
                 nd2 = V.fold_sq_l2(c[2], cvec)
                 if nd2 < c[1]:
                     c[1] = nd2
-        if len(centers) < k and new_centers:
+        if len(centers) < k:
             col = F.col("min_d2")
             for vec in new_centers:
                 col = F.least(col, V.sq_l2(vec_col, V.lit_array_sql(vec)))
@@ -135,28 +132,6 @@ def gmm_distributed(
             if prev is not None:
                 prev.unpersist()
             prev, cur = cur, new
-        elif len(centers) < k and not new_centers:
-            # no candidate cleared the threshold (degenerate: all ties)
-            # fall back to taking the single global argmax this round
-            far = rows[0]
-            centers.append(
-                (
-                    len(centers),
-                    far[id_col],
-                    math.sqrt(max(float(far["min_d2"]), 0.0)),
-                    list(far[vec_col]),
-                )
-            )
-            if len(centers) < k:
-                new = cur.withColumn(
-                    "min_d2",
-                    F.least(
-                        "min_d2", V.sq_l2(vec_col, V.lit_array_sql(far[vec_col]))
-                    ),
-                ).cache()
-                if prev is not None:
-                    prev.unpersist()
-                prev, cur = cur, new
     for d in (prev, cur):
         if d is not None:
             d.unpersist()

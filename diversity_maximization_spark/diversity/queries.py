@@ -705,10 +705,7 @@ def div_matroid_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     delegates = assigned.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= 2
     )
-    rows = delegates.orderBy("vec_id").collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    labels = np.array([r["label"] for r in rows])
-    X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+    ids, X, labels = V.collect_sorted(delegates, "vec_id", "embedding", "label")
     D = K.pairwise_l2(X)
     matroid = PartitionMatroid({lab: 1 for lab in range(10)})
 
@@ -1078,10 +1075,8 @@ def _kmeans_fit(spark, sf_dir, k=8, iters=5):
     agg_kmeans_silhouette — see div_kmeans for the exactness
     contract."""
     pts = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    centers = [
-        list(r["embedding"])
-        for r in pts.orderBy("vec_id").limit(k).collect()
-    ]
+    _, X = V.collect_sorted(pts.orderBy("vec_id").limit(k), "vec_id", "embedding")
+    centers = X.tolist()
     for _ in range(iters):
         dists = F.array(*[V.sq_l2("embedding", V.lit_array_sql(c)) for c in centers])
         assigned = pts.select(

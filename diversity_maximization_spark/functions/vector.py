@@ -31,11 +31,17 @@ distance to it parses once through ``F.expr``.
 At 100 TB scale these expressions vectorize per-row with no Python
 boundary; the O(n^2) *pairing* cost is handled separately by the LSH /
 bucketing rewrites in plans/distance_join.py, not here.
+
+The driver boundary: a vector column becomes a numpy matrix only
+through ``matrix`` (a pandas UDF batch) and ``collect_sorted`` (a pull
+to the driver, unpacked by ``matrix``), so both sides validate alike.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -191,3 +197,54 @@ def farthest_first(X: list, k: int) -> tuple[list[int], list[float]]:
             if d < md[i]:
                 md[i] = d
     return chosen, d2
+
+
+# --- The driver boundary ------------------------------------------------------
+
+
+def matrix(vectors, keys: pd.Series) -> np.ndarray:
+    """A vector column as an (n, d) float64 matrix (float32 -> float64
+    is exact). `vectors` is a pandas Series of arrays (a pandas UDF
+    batch) or an Arrow list column (a driver pull); an error names the
+    first offending row's key. Each row must be a non-NULL array of one
+    length with finite elements: a NaN or +-inf coordinate would win a
+    farthest-first argmax and poison every distance, and both Arrow and
+    pandas turn a NULL element into NaN."""
+
+    def check(bad: np.ndarray, what: str) -> None:
+        if bad.any():
+            raise ValueError(f"{what} at {keys.name} {keys.iloc[int(np.argmax(bad))]}")
+
+    series = isinstance(vectors, pd.Series)
+    if series:
+        null = vectors.isna().to_numpy()
+        lengths = np.array([0 if z else len(v) for v, z in zip(vectors, null)])
+    else:
+        vectors = vectors.combine_chunks()
+        null = vectors.is_null().to_numpy(zero_copy_only=False)
+        lengths = vectors.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    n, d = len(null), int(lengths[0]) if len(null) else 0
+    check(null, "NULL vector")
+    check(lengths != d, f"vector length is not {d}")
+    if series:
+        X = np.stack(vectors.to_numpy()) if n else np.empty((0, 0))
+    else:
+        X = vectors.flatten().to_numpy(zero_copy_only=False).reshape(n, d)
+    X = X.astype(np.float64, copy=False)
+    check(~np.isfinite(X).all(axis=1), "non-finite (NaN, inf or NULL) vector element")
+    return X
+
+
+def collect_sorted(df: DataFrame, key: str, vec_col: str, *cols: str):
+    """Pull a vector column to the driver: one Arrow transfer of the
+    `key`, `vec_col` and `cols` columns, ordered by `key` on the driver
+    with a stable argsort. A Spark orderBy would range-partition first,
+    and the range partitioner's sampling job re-executes the whole
+    upstream plan; an orderBy(...).limit(m) that selects the rows plans
+    as one TakeOrdered job and is fine to pull. Returns (keys, X,
+    *cols) as numpy arrays; X is `matrix` of `vec_col`."""
+    t = df.select(key, vec_col, *cols).toArrow()
+    keys = t.column(key).to_numpy()
+    X = matrix(t.column(vec_col), pd.Series(keys, name=key))
+    order = np.argsort(keys, kind="stable")
+    return (keys[order], X[order], *(t.column(c).to_numpy()[order] for c in cols))

@@ -241,20 +241,21 @@ def mmr_over(
     prev = None
     while len(picks) < k:
         score = lam * F.col("rel") - (1 - lam) * F.col("max_sim")
-        rows = (
+        # the ordered limit selects the m candidates; they arrive
+        # sorted by vec_id, and the threshold is their lowest score
+        ids, X, rel, max_sim = V.collect_sorted(
             state.filter(~F.col("vec_id").isin([p[1] for p in picks]))
             .orderBy(score.desc(), F.col("vec_id"))
-            .limit(m)
-            .collect()
+            .limit(m),
+            "vec_id", "embedding", "rel", "max_sim",
         )
-        if not rows:
+        if not len(ids):
             break
-        exhaustive = len(rows) < m
-        last = rows[-1]
-        threshold = lam * last["rel"] - (1 - lam) * last["max_sim"]
+        exhaustive = len(ids) < m
+        threshold = float((lam * rel - (1 - lam) * max_sim).min())
         cand = [
-            [r["vec_id"], float(r["rel"]), float(r["max_sim"]), list(r["embedding"])]
-            for r in rows
+            list(c)
+            for c in zip(ids.tolist(), rel.tolist(), max_sim.tolist(), X.tolist())
         ]
         new_picked = []  # (vec, qn) applied back to the DataFrame state
         while len(picks) < k and cand:

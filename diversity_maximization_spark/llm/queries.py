@@ -105,7 +105,7 @@ def embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load(spark, sf_dir, "embeddings")
-    dim = len(e.select("embedding").first()["embedding"])
+    dim = e.select(F.size("embedding")).first()[0]
 
     def partials(batches):
         gram = np.zeros((dim, dim))
@@ -113,7 +113,7 @@ def embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         cnt, pid = 0, -1
         for pdf in batches:
             pid = int(pdf["pid"].iloc[0])
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            X = V.matrix(pdf["embedding"], pdf["vec_id"])
             gram += X.T @ X
             rsum += X.sum(axis=0)
             cnt += len(X)
@@ -128,7 +128,7 @@ def embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     rows = (
-        e.select("embedding")
+        e.select("vec_id", "embedding")
         .withColumn("pid", F.spark_partition_id())
         .mapInPandas(
             partials,
@@ -281,7 +281,7 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = np.zeros((d, d), dtype=np.int64)
         seen = False
         for pdf in batches:
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            X = V.matrix(pdf["embedding"], pdf["vec_id"])
             for i in range(d):
                 q = np.floor((X[:, i : i + 1] * X) * float(_POWER_PSCALE) + 0.5)
                 acc[i] += q.astype(np.int64).sum(axis=0)
@@ -293,7 +293,7 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     rows = (
-        ensure_parallelism(e.select("embedding"))
+        ensure_parallelism(e.select("vec_id", "embedding"))
         .mapInPandas(partials, "i int, j int, m bigint")
         .groupBy("i", "j")
         .agg(F.sum("m").alias("m"))
@@ -431,10 +431,8 @@ def pq_train_codebooks(spark: SparkSession, e: DataFrame):
     Lloyd selection the trainer makes is engine-independent."""
     import numpy as np
 
-    sample = (
-        e.orderBy("vec_id").limit(PQ_SAMPLE).select("embedding").collect()
-    )
-    X = np.array([r[0] for r in sample], dtype=np.float64)
+    sample = e.orderBy("vec_id").limit(PQ_SAMPLE)
+    _, X = V.collect_sorted(sample, "vec_id", "embedding")
     n, dim = X.shape
     dsub = dim // PQ_M
     books = np.empty((PQ_M, PQ_K, dsub))
@@ -568,7 +566,7 @@ def embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         B = bks.value
         m_, k_, dsub = B.shape
         for pdf in batches:
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
+            X = V.matrix(pdf["embedding"], pdf["vec_id"])
             codes = np.empty((len(X), m_), dtype=np.int64)
             err = np.zeros(len(X))
             for m in range(m_):

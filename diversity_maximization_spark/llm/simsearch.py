@@ -153,9 +153,8 @@ def ivf_topk(
     (_ivf_oracle)."""
     import pandas as pd
 
-    sample = e.orderBy("vec_id").limit(512).collect()
-    Xf = [[float(v) for v in r["embedding"]] for r in sample]
-    X = np.array(Xf, dtype=np.float64)
+    _, X = V.collect_sorted(e.orderBy("vec_id").limit(512), "vec_id", "embedding")
+    Xf = X.tolist()
     cidx, _ = V.farthest_first(Xf, n_centroids)
     cents = X[cidx]
 
@@ -198,8 +197,8 @@ def ivf_topk(
                     "sim": pd.Series([], dtype="float64"),
                 }
             )
-        Q = np.stack(qpdf["q_emb"].to_numpy()).astype(np.float64)
-        M = np.stack(mpdf["m_emb"].to_numpy()).astype(np.float64)
+        Q = V.matrix(qpdf["q_emb"], qpdf["vec_id"])
+        M = V.matrix(mpdf["m_emb"], mpdf["neighbor"])
         Q /= np.linalg.norm(Q, axis=1, keepdims=True)
         M /= np.linalg.norm(M, axis=1, keepdims=True)
         S = Q @ M.T
@@ -667,18 +666,15 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load(spark, sf_dir, "embeddings")
-    sample = e.orderBy("vec_id").limit(512).collect()
-    Xf = [[float(v) for v in r["embedding"]] for r in sample]
-    X = np.array(Xf, dtype=np.float64)
+    _, X = V.collect_sorted(e.orderBy("vec_id").limit(512), "vec_id", "embedding")
+    Xf = X.tolist()
     cidx, _ = V.farthest_first(Xf, SEMDEDUP_CLUSTERS)
     data = _assign_centroids(e, X[cidx], "cluster")
     t = SEMDEDUP_THRESHOLD
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
-        M = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-        )
+        M = V.matrix(pdf["embedding"], pdf["vec_id"])
         # fold-exact squared norms: dim-by-dim += IS a left fold per row
         sq = np.zeros(len(M))
         for d in range(M.shape[1]):

@@ -174,9 +174,7 @@ def threshold_candidate_pairs(
 
 
 def _broadcast_corpus(spark: SparkSession, e: DataFrame):
-    rows = e.select("vec_id", "embedding").collect()
-    ids = np.fromiter((r["vec_id"] for r in rows), dtype=np.int64)
-    B = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    ids, B = V.collect_sorted(e, "vec_id", "embedding")
     Bn = B / np.linalg.norm(B, axis=1, keepdims=True)
     return spark.sparkContext.broadcast((ids, Bn))
 
@@ -207,7 +205,7 @@ def blas_topk_candidates(
         cids, corpus = bc.value
         pos = {int(v): i for i, v in enumerate(cids)}
         for pdf in _blocked(it, len(cids)):
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            A = V.matrix(pdf["embedding"], pdf["vec_id"])
             An = A / np.linalg.norm(A, axis=1, keepdims=True)
             S = An @ corpus.T
             qids = pdf["vec_id"].to_numpy()
@@ -265,7 +263,7 @@ def blas_threshold_pairs(
 
         cids, corpus = bc.value
         for pdf in _blocked(it, len(cids)):
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            A = V.matrix(pdf["embedding"], pdf["vec_id"])
             An = A / np.linalg.norm(A, axis=1, keepdims=True)
             S = An @ corpus.T
             qids = pdf["vec_id"].to_numpy()
@@ -327,7 +325,7 @@ def simhash_bands(
         for pdf in it:
             if not len(pdf):
                 continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            X = V.matrix(pdf["embedding"], pdf["vec_id"])
             bits = (X @ planes.T >= 0).astype(np.uint8)  # (m, n_planes)
             ids = pdf["vec_id"].to_numpy()
             out_id, out_band, out_sig = [], [], []
@@ -523,9 +521,7 @@ def lsh_candidate_pairs(
 
 
 def _broadcast_corpus_raw(spark: SparkSession, e: DataFrame):
-    rows = e.select("vec_id", "embedding").collect()
-    ids = np.fromiter((r["vec_id"] for r in rows), dtype=np.int64)
-    B = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    ids, B = V.collect_sorted(e, "vec_id", "embedding")
     return spark.sparkContext.broadcast((ids, B, (B * B).sum(axis=1)))
 
 
@@ -544,7 +540,7 @@ def blas_l2_threshold_pairs(
 
         cids, B, b2 = bc.value
         for pdf in _blocked(it, len(cids)):
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            A = V.matrix(pdf["embedding"], pdf["vec_id"])
             a2 = (A * A).sum(axis=1)
             D2 = a2[:, None] + b2[None, :] - 2.0 * (A @ B.T)
             qids = pdf["vec_id"].to_numpy()
@@ -609,7 +605,7 @@ def blas_l2_topk_candidates(
         cids, B, b2 = bc.value
         pos = {int(v): i for i, v in enumerate(cids)}
         for pdf in _blocked(it, len(cids)):
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            A = V.matrix(pdf["embedding"], pdf["vec_id"])
             a2 = (A * A).sum(axis=1)
             D2 = a2[:, None] + b2[None, :] - 2.0 * (A @ B.T)
             qids = pdf["vec_id"].to_numpy()

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.vector import fold_sq_l2
+from ..functions import vector as V
 from ..registry import query
 from ..scratch import scratch_dir
 from ..sources import load
@@ -57,7 +57,7 @@ REPLAY_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 
 
 def _l2(a, b) -> float:
-    return math.sqrt(fold_sq_l2(a, b))
+    return math.sqrt(V.fold_sq_l2(a, b))
 
 
 def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
@@ -314,20 +314,20 @@ def streaming_coreset_sharded(
     at the end. Shard key is the PORTABLE Knuth mix (shard_mix) so the
     per-shard census is hash-checkable in DuckDB."""
     snaps = streaming_coreset_sharded_snapshots(spark, sf_dir, n_shards, n_slices)
-    rows = snaps.select("shard", "seq", "vec_id", "weight", "tau", "embedding").collect()
+    ids, X, shard, seq, weight, tau = V.collect_sorted(
+        snaps, "vec_id", "embedding", "shard", "seq", "weight", "tau"
+    )
 
     # final snapshot per shard (seq counts per key, so max per shard)
-    last = {}
-    for r in rows:
-        last[r["shard"]] = max(last.get(r["shard"], 0), r["seq"])
-    final = [r for r in rows if r["seq"] == last[r["shard"]]]
+    last = pd.Series(seq).groupby(shard).transform("max").to_numpy()
+    final = np.flatnonzero(seq == last)
 
-    # compose: union the per-shard weighted centers, re-fold with
-    # weights carried — tau starts at the max shard tau so the merged
-    # summary keeps the separation invariant
-    merged = {"tau": max((r["tau"] for r in final), default=0.0), "centers": []}
-    for r in sorted(final, key=lambda r: r["vec_id"]):
-        fold_point(merged, int(r["vec_id"]), list(r["embedding"]), int(r["weight"]))
+    # compose: union the per-shard weighted centers, re-fold in vec_id
+    # order with weights carried — tau starts at the max shard tau so
+    # the merged summary keeps the separation invariant
+    merged = {"tau": float(tau[final].max()) if len(final) else 0.0, "centers": []}
+    for i, vec in zip(final.tolist(), X[final].tolist()):
+        fold_point(merged, int(ids[i]), vec, int(weight[i]))
     centers = merged["centers"]
     # a typed pandas frame plans as a LocalTableScan: collecting the
     # result needs no Python-worker job
@@ -552,22 +552,13 @@ def div_coreset_stream_matroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_per_trigger=None,
     )
     last = all_snaps.agg(F.max("seq")).collect()[0][0]
-    summary = (
-        all_snaps.filter(F.col("seq") == last)
-        .select("vec_id", "label")
-        .orderBy("vec_id")
-        .collect()
+    # sequential matroid-constrained finish on the summary points,
+    # joined to their embeddings and pulled in one transfer
+    summary = all_snaps.filter(F.col("seq") == last).select("vec_id", "label")
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    ids, X, labels = V.collect_sorted(
+        summary.join(emb, "vec_id"), "vec_id", "embedding", "label"
     )
-    # sequential matroid-constrained finish on the summary points
-    emb = load(spark, sf_dir, "embeddings")
-    ids = [r["vec_id"] for r in summary]
-    vec_of = {
-        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.filter(F.col("vec_id").isin(ids)).collect()
-    }
-    ids = [i for i in ids if i in vec_of]
-    labels = np.array([r["label"] for r in summary if r["vec_id"] in vec_of])
-    X = np.stack([vec_of[i] for i in ids])
     D = K.pairwise_l2(X)
     matroid = PartitionMatroid({lab: MATROID_CAP for lab in range(10)})
     init: list = []

@@ -68,3 +68,26 @@ def test_catalog_analyze_stats_registers_its_database_dir(spark, sf_dir):
     db_loc = os.path.join(tempfile.gettempdir(), f"dms_stats_db_{os.getpid()}")
     QUERIES["catalog_analyze_stats"](spark, sf_dir).collect()
     assert db_loc in scratch._SCRATCH
+
+
+@pytest.mark.parametrize("bad", [[1.0, None], [float("nan"), 1.0]], ids=["null", "nan"])
+def test_diversity_and_gmm_refuse_null_or_nan_elements(spark, bad):
+    """A NULL element reaches the driver as NaN; both must raise
+    instead of returning nan / a NULL dist_when_chosen."""
+    df = _frame(spark, _POINTS[:2] + [(2, bad)])
+    with pytest.raises(ValueError, match="vec_id 2$"):
+        api.diversity(df, "edge")
+    with pytest.raises(ValueError, match="vec_id 2$"):
+        api.gmm(df, 2, distributed=False)
+
+
+@pytest.mark.parametrize("distributed", [True, False], ids=["distributed", "local"])
+def test_gmm_empty_input_selects_nothing(spark, distributed):
+    sel = api.gmm(_frame(spark, []), 3, distributed=distributed)
+    assert sel.columns == ["sel_order", "vec_id", "dist_when_chosen"]
+    assert sel.collect() == []
+
+
+def test_diversity_empty_input_refused(spark):
+    with pytest.raises(ValueError, match="empty input"):
+        api.diversity(_frame(spark, []), "edge")

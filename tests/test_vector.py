@@ -1,5 +1,7 @@
 """The fold-exact vector library: its Spark, DuckDB and Python forms
-agree to the bit, and no engine module re-types the fold."""
+agree to the bit, no engine module re-types the fold, and every
+vector column crosses to numpy through vector.matrix /
+vector.collect_sorted."""
 
 from __future__ import annotations
 
@@ -175,6 +177,72 @@ def test_farthest_first_distances_at_pick_time():
     assert sorted(V.farthest_first(X[:3], 10)[0]) == [0, 1, 2]
 
 
+# --- the driver boundary -----------------------------------------------------
+
+
+def test_collect_sorted_is_a_stable_sort_by_key(spark):
+    """createDataFrame keeps the input order across its partitions, and
+    equal keys keep that order (numpy's default argsort scrambles 187
+    of these 200 positions)."""
+    rows = [((7 * i) % 5, [float(i), float(-i)], i) for i in range(200)]
+    df = spark.createDataFrame(rows, "k int, v array<double>, tag int")
+    keys, X, tag = V.collect_sorted(df, "k", "v", "tag")
+    want = sorted(rows, key=lambda r: r[0])
+    assert keys.tolist() == [r[0] for r in want]
+    assert tag.tolist() == [r[2] for r in want]
+    assert X.tolist() == [r[1] for r in want]
+
+
+def test_collect_sorted_spans_arrow_chunks(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 50, numPartitions=4).select(
+        (49 - F.col("id")).alias("k"),
+        F.array(F.col("id").cast("float"), F.lit(1.5).cast("float")).alias("v"),
+    )
+    assert df.toArrow().column("v").num_chunks > 1
+    keys, X = V.collect_sorted(df, "k", "v")
+    assert keys.tolist() == list(range(50))
+    assert X.dtype == np.float64 and X.shape == (50, 2)
+    assert X[:, 0].tolist() == [float(49 - k) for k in range(50)]
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_collect_sorted_bit_identical_to_row_path(spark, elem):
+    rng = np.random.default_rng(5)
+    vals = rng.normal(scale=1e6, size=(30, 7))
+    vals[3] = [1e30, -1e-30, 0.1, 1 / 3, -0.0, 2.0**-140, 3.4e38]
+    if elem == "float":
+        vals = vals.astype(np.float32)
+    rows = [(int(i), [float(x) for x in v]) for i, v in zip(rng.permutation(30), vals)]
+    df = spark.createDataFrame(rows, f"k bigint, v array<{elem}>")
+    _, X = V.collect_sorted(df, "k", "v")
+    row_path = np.array([r["v"] for r in df.orderBy("k").collect()], dtype=np.float64)
+    assert X.tobytes() == row_path.tobytes()
+
+
+@pytest.mark.parametrize(
+    "bad, message",
+    [
+        ([1.0], "length is not 2"),
+        (None, "NULL vector"),
+        ([1.0, None], "non-finite"),
+        ([float("nan"), 1.0], "non-finite"),
+        ([1.0, float("-inf")], "non-finite"),
+    ],
+    ids=["ragged", "null_row", "null_element", "nan", "inf"],
+)
+def test_bad_vectors_refused_on_both_sides(spark, bad, message):
+    """The driver pull and a pandas batch validate alike."""
+    rows = [(0, [0.0, 1.0]), (7, bad), (2, [2.0, 3.0])]
+    df = spark.createDataFrame(rows, "k bigint, v array<double>")
+    with pytest.raises(ValueError, match=f"{message}.* at k 7$"):
+        V.collect_sorted(df, "k", "v")
+    batch = df.toPandas()
+    with pytest.raises(ValueError, match=f"{message}.* at k 7$"):
+        V.matrix(batch["v"], batch["k"])
+
+
 # --- one copy of the fold ----------------------------------------------------
 
 _FOLD_PATTERNS = (
@@ -212,3 +280,30 @@ def test_guard_allowlist_is_live():
     for rel in _ALLOWED:
         src = _joined_source(ENGINE / rel)
         assert any(p in src for p in _FOLD_PATTERNS), rel
+    for rel in _BOUNDARY_ALLOWED:
+        assert _BOUNDARY.search((ENGINE / rel).read_text()), rel
+
+
+# --- one driver boundary for vector columns ----------------------------------
+
+# a Row pull that unpacks a vector column by hand, or a pandas unpack
+_BOUNDARY = re.compile(
+    r'r\["embedding"\]|(r|first|far)\[vec_col\]|np\.stack\(|np\.array\(list\(pdf'
+)
+
+_BOUNDARY_ALLOWED = {
+    "functions/vector.py": "the library itself",
+    "llm/multimodal.py": "stacks image luma frames, not a vector column",
+}
+
+
+def test_vector_columns_unpack_in_one_module():
+    hits = []
+    for path in sorted(ENGINE.rglob("*.py")):
+        rel = path.relative_to(ENGINE).as_posix()
+        if rel in _BOUNDARY_ALLOWED:
+            continue
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if _BOUNDARY.search(line):
+                hits.append(f"{rel}:{n}: {line.strip()}")
+    assert not hits, "use vector.collect_sorted / vector.matrix"

@@ -14,17 +14,10 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
-from pathlib import Path
 
-ROOT = str(Path(__file__).resolve().parent.parent)
-sys.path.insert(0, ROOT)
-# Python workers import the engine by name, from any working directory
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
-)
+import _root  # noqa: F401  (engine on sys.path and PYTHONPATH)
 
 from diversity_maximization_spark import registry
 from diversity_maximization_spark.session import get_spark

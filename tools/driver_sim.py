@@ -18,7 +18,7 @@ import hashlib
 import sys
 import time
 
-sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parent.parent))
+import _root  # noqa: F401  (engine on sys.path and PYTHONPATH)
 
 import duckdb
 import pandas as pd

@@ -13,9 +13,8 @@ compare a plan before and after a change):
 from __future__ import annotations
 
 import argparse
-import sys
 
-sys.path.insert(0, ".")
+from _root import ROOT
 
 from diversity_maximization_spark import registry
 from diversity_maximization_spark.session import get_spark
@@ -291,12 +290,12 @@ def main() -> None:
     marker = "<!-- manual sections below: preserved by explain_audit -->"
     manual = ""
     try:
-        prev = open("PLANS.md").read()
+        prev = open(ROOT / "PLANS.md").read()
         if marker in prev:
             manual = prev[prev.index(marker):]
     except FileNotFoundError:
         pass
-    with open("PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
         if manual:
             f.write("\n" + manual)

@@ -8,9 +8,8 @@ adding operators:
 from __future__ import annotations
 
 import inspect
-import sys
 
-sys.path.insert(0, ".")
+from _root import ROOT
 
 from diversity_maximization_spark import registry
 
@@ -55,7 +54,7 @@ def main() -> None:
         *rows,
         "",
     ]
-    with open("OPERATORS.md", "w") as f:
+    with open(ROOT / "OPERATORS.md", "w") as f:
         f.write("\n".join(out))
     print(f"OPERATORS.md written ({len(rows)} keys)")
 
