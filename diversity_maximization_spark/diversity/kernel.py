@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..functions import vector as V
 from ..metrics import KERNEL_DISTANCE_EVALS
 
 
@@ -48,9 +49,8 @@ def pairwise(X: np.ndarray, metric: str = "euclidean") -> np.ndarray:
 
 def l2_to_point(X: np.ndarray, c: np.ndarray) -> np.ndarray:
     X = np.asarray(X, dtype=np.float64)
-    diff = X - np.asarray(c, dtype=np.float64)[None, :]
     KERNEL_DISTANCE_EVALS.add(len(X))
-    return np.sqrt((diff * diff).sum(axis=1))
+    return np.sqrt(V.fold_sq_l2_columns(V.columns(X), c))
 
 
 def cosine_to_point(X: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -75,7 +75,8 @@ def farthest_first_clusters(
 ):
     """Gonzalez farthest-first traversal (GMM), 2-approx for
     remote-edge [SURVEY.md §2.1 / PAPER-VLDB17 §2], that also clusters
-    every point around the chosen centers in the same distance passes.
+    every point around the chosen centers in the same distance passes
+    (vector.farthest_first_traversal).
 
     Returns (chosen, dist_when, min_dist, label): chosen[0] = start;
     each next point maximizes distance to the chosen set, ties broken
@@ -84,29 +85,34 @@ def farthest_first_clusters(
     nearest center and label[i] that center's rank. One distance pass
     per center: label moves to a new center only on a strictly
     smaller distance, so on ties the earlier center wins — exactly
-    np.argmin over the full (n, k) center-distance matrix, and
-    min_dist equals its row minimum bit for bit. `metric` is
+    np.argmin over the full (n, k) matrix of the compared distances,
+    and min_dist equals its row minimum bit for bit. `metric` is
     euclidean or cosine (the reference's two distance families).
+
+    Euclidean passes are the fold-exact squared distances
+    (vector.fold_sq_l2_columns): the argmax, the relabel and the min
+    all compare squared fold values, and sqrt is taken once on return,
+    so dist_when and min_dist are sqrt of the fold bit for bit, and
+    the picks equal vector.farthest_first's.
     """
-    n = len(X)
-    k = min(k, n)
-    chosen = [start]
-    dist_when = [0.0]
-    min_dist = dist_to_point(X, X[start], metric)
-    label = np.zeros(n, dtype=np.int64)
-    for rank in range(1, k):
-        # argmax with lowest-index tie-break (np.argmax returns first
-        # max); chosen points are masked out so duplicate points (all
-        # remaining distances 0) never re-select a chosen index
-        masked = min_dist.copy()
-        masked[np.asarray(chosen)] = -np.inf
-        idx = int(np.argmax(masked))
-        chosen.append(idx)
-        dist_when.append(float(min_dist[idx]))
-        d = dist_to_point(X, X[idx], metric)
-        label[d < min_dist] = rank
-        np.minimum(min_dist, d, out=min_dist)
-    return np.array(chosen), np.array(dist_when), min_dist, label
+    X = np.asarray(X, dtype=np.float64)
+    if metric == "euclidean":
+        XT = V.columns(X)
+
+        def dist(i, out):
+            KERNEL_DISTANCE_EVALS.add(len(X))
+            return V.fold_sq_l2_columns(XT, X[i], out)
+    elif metric == "cosine":
+        def dist(i, out):
+            return cosine_to_point(X, X[i])
+    else:
+        raise ValueError(f"unknown metric: {metric}")
+    chosen, dist_when, min_dist, label = V.farthest_first_traversal(
+        len(X), k, dist, start
+    )
+    if metric == "euclidean":
+        dist_when, min_dist = np.sqrt(dist_when), np.sqrt(min_dist, out=min_dist)
+    return chosen, dist_when, min_dist, label
 
 
 def farthest_first(X: np.ndarray, k: int, start: int = 0, metric: str = "euclidean"):
@@ -117,7 +123,10 @@ def farthest_first(X: np.ndarray, k: int, start: int = 0, metric: str = "euclide
 
 
 def eval_edge(D: np.ndarray) -> float:
-    """Remote-edge: min pairwise distance."""
+    """Remote-edge: min pairwise distance (0.0 for one point, as the
+    other objectives)."""
+    if len(D) <= 1:
+        return 0.0
     iu = np.triu_indices(len(D), k=1)
     return float(D[iu].min())
 

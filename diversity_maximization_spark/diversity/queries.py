@@ -364,10 +364,12 @@ def _coreset_mr_oracle(
     the vec_id-sorted partition frame), nearest-center assignment
     (ties -> earlier center), per-cluster delegate selection (lowest
     vec_id, excluding the center), and delegate-weighted kernel
-    weights. Distances are sqrt-of-left-fold; the kernel's numpy
-    pairwise summation differs only in the last ulp, absorbed by
-    round(.,6) on the one float output column — selection flips
-    would need sub-ulp near-ties, absent from the fixtures."""
+    weights. Distances are sqrt-of-left-fold, and the kernel runs the
+    same fold (vector.fold_sq_l2_columns), so every distance is
+    bit-identical on both sides. The kernel compares the squared fold
+    values and this replay their sqrt; the two orders can differ only
+    where two distinct squared distances round to one sqrt, a
+    sub-ulp near-tie absent from the fixtures."""
     from .coreset import part_mix
 
     dist = V.duck_l2_dist

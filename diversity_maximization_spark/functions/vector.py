@@ -21,7 +21,13 @@ forms, so results are bit-identical across them:
   oracle side;
 - Python folds (``fold_*``) for driver-side or Python-worker
   selections that must replay in both engines (numpy's pairwise
-  summation would drift in the last ulp).
+  summation would drift in the last ulp);
+- the numpy column fold (``fold_sq_l2_columns`` over the column-major
+  copy ``columns(X)``): the Python fold run for every point at once,
+  one coordinate at a time, by elementwise ufuncs (one IEEE operation
+  per element, never re-associated). Farthest-first traversal
+  (``farthest_first_traversal``) runs on it, in the driver and in the
+  per-partition kernel alike.
 
 Anything derived (sqrt, cosine, normalization) is applied to a fold
 result in the same expression order in every form. A driver-side
@@ -170,33 +176,75 @@ def fold_sq_l2(a, b) -> float:
     return s
 
 
-def farthest_first(X: list, k: int) -> tuple[list[int], list[float]]:
-    """Farthest-first traversal with fold-exact squared distances:
-    seed = index 0, then the argmax of the min squared distance to the
-    chosen set (strict >, so ties keep the LOWEST index — the same
-    pick as ORDER BY md DESC, pos ASC). Returns the chosen indices and
-    each pick's squared distance at pick time (0.0 for the seed)."""
-    n = len(X)
+def columns(X) -> np.ndarray:
+    """An (n, d) matrix as the (d, n) C-contiguous float64 copy that
+    ``fold_sq_l2_columns`` reads one coordinate row at a time."""
+    return np.ascontiguousarray(np.asarray(X, dtype=np.float64).T)
+
+
+def fold_sq_l2_columns(XT: np.ndarray, c, out: np.ndarray | None = None) -> np.ndarray:
+    """``fold_sq_l2(x, c)`` for every column x of XT = ``columns(X)``,
+    bit for bit: s = ((0 + t1) + t2) + ... elementwise, with
+    t = (x - c) * (x - c) per coordinate. `out` (length n) receives
+    the sums."""
+    c = np.asarray(c, dtype=np.float64)
+    s = np.empty(XT.shape[1]) if out is None else out
+    s.fill(0.0)
+    t = np.empty_like(s)
+    for j in range(len(XT)):
+        np.subtract(XT[j], c[j], out=t)
+        np.multiply(t, t, out=t)
+        np.add(s, t, out=s)
+    return s
+
+
+def farthest_first_traversal(n: int, k: int, dist, start: int = 0):
+    """Farthest-first (Gonzalez) traversal of n >= 1 points over any
+    distance pass: `dist(i, out)` returns point i's distance to every
+    point, and may reuse the length-n buffer `out` for it.
+
+    chosen[0] = start; each next pick is the first argmax of the
+    distance to the chosen set among the points not chosen yet (so a
+    duplicate never beats a new point, and ties keep the LOWEST
+    index). label[i] is the rank of i's nearest center; it moves to a
+    new center only on a strictly smaller distance, so ties keep the
+    earlier center.
+
+    Returns (chosen, at_pick, min_dist, label): each pick's distance
+    to the set when it was picked (0.0 for the start) and every
+    point's distance to its nearest center, in the units `dist`
+    returns."""
     k = min(k, n)
-    if k <= 0:
+    chosen, at_pick = [start], [0.0]
+    min_dist = dist(start, np.empty(n))
+    label = np.zeros(n, dtype=np.int64)
+    d, masked = np.empty(n), np.empty(n)
+    for rank in range(1, k):
+        np.copyto(masked, min_dist)
+        masked[chosen] = -np.inf
+        idx = int(np.argmax(masked))
+        chosen.append(idx)
+        at_pick.append(float(min_dist[idx]))
+        d = dist(idx, d)
+        label[d < min_dist] = rank
+        np.minimum(min_dist, d, out=min_dist)
+    return np.array(chosen), np.array(at_pick), min_dist, label
+
+
+def farthest_first(X, k: int) -> tuple[list[int], list[float]]:
+    """Farthest-first traversal of the rows of X with fold-exact
+    squared distances: seed = index 0, then the first argmax of the
+    min squared distance to the chosen set (the same pick as
+    ORDER BY md DESC, pos ASC). Returns the chosen indices and each
+    pick's squared distance at pick time (0.0 for the seed)."""
+    X = np.asarray(X, dtype=np.float64)
+    if min(k, len(X)) <= 0:
         return [], []
-    chosen, d2 = [0], [0.0]
-    in_chosen = {0}
-    md = [fold_sq_l2(x, X[0]) for x in X]
-    for _ in range(1, k):
-        best, bi = -1.0, -1
-        for i in range(n):
-            if i not in in_chosen and md[i] > best:
-                best, bi = md[i], i
-        chosen.append(bi)
-        d2.append(best)
-        in_chosen.add(bi)
-        cx = X[bi]
-        for i in range(n):
-            d = fold_sq_l2(X[i], cx)
-            if d < md[i]:
-                md[i] = d
-    return chosen, d2
+    XT = columns(X)
+    chosen, d2, _, _ = farthest_first_traversal(
+        len(X), k, lambda i, out: fold_sq_l2_columns(XT, X[i], out)
+    )
+    return chosen.tolist(), d2.tolist()
 
 
 # --- The driver boundary ------------------------------------------------------

@@ -711,10 +711,9 @@ def select_diverse_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def ff(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        vecs = [list(map(float, v)) for v in pdf["embedding"]]
         ids = list(pdf["vec_id"])
         src = pdf["source"].iloc[0]
-        chosen, d2 = V.farthest_first(vecs, 4)
+        chosen, d2 = V.farthest_first(V.matrix(pdf["embedding"], pdf["vec_id"]), 4)
         out = [
             (src, rank, int(ids[i]), d ** 0.5)
             for rank, (i, d) in enumerate(zip(chosen, d2))

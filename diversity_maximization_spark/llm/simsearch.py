@@ -154,15 +154,14 @@ def ivf_topk(
     import pandas as pd
 
     _, X = V.collect_sorted(e.orderBy("vec_id").limit(512), "vec_id", "embedding")
-    Xf = X.tolist()
-    cidx, _ = V.farthest_first(Xf, n_centroids)
+    cidx, _ = V.farthest_first(X, n_centroids)
     cents = X[cidx]
 
     data = _assign_centroids(e, cents, "bucket")
 
     # per-centroid probe list: nprobe nearest centroids, fold-exact
     # distances, ties -> lower centroid id (tiny, literal)
-    cf = [Xf[i] for i in cidx]
+    cf = cents.tolist()
     probe_map = {
         i: sorted(
             range(n_centroids), key=lambda j: (V.fold_sq_l2(cf[i], cf[j]), j)
@@ -667,8 +666,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "embeddings")
     _, X = V.collect_sorted(e.orderBy("vec_id").limit(512), "vec_id", "embedding")
-    Xf = X.tolist()
-    cidx, _ = V.farthest_first(Xf, SEMDEDUP_CLUSTERS)
+    cidx, _ = V.farthest_first(X, SEMDEDUP_CLUSTERS)
     data = _assign_centroids(e, X[cidx], "cluster")
     t = SEMDEDUP_THRESHOLD
 
@@ -969,11 +967,13 @@ def _lof_oracle() -> str:
 
     d = duck_l2_dist("a.embedding", "b.embedding")
     return f"""
-WITH nn AS (
-  SELECT a.vec_id AS a, b.vec_id AS b, {d} AS d,
-         ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                            ORDER BY {d} ASC, b.vec_id ASC) AS rn
+WITH pairs AS (
+  SELECT a.vec_id AS a, b.vec_id AS b, {d} AS d
   FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
+), nn AS (
+  SELECT a, b, d,
+         ROW_NUMBER() OVER (PARTITION BY a ORDER BY d ASC, b ASC) AS rn
+  FROM pairs
 ), knn AS (
   SELECT * FROM nn WHERE rn <= {LOF_K}
 ), kd AS (

@@ -91,3 +91,10 @@ def test_gmm_empty_input_selects_nothing(spark, distributed):
 def test_diversity_empty_input_refused(spark):
     with pytest.raises(ValueError, match="empty input"):
         api.diversity(_frame(spark, []), "edge")
+
+
+@pytest.mark.parametrize(
+    "objective", ["edge", "clique", "star", "bipartition", "tree", "cycle"]
+)
+def test_diversity_of_one_point_is_zero(spark, objective):
+    assert api.diversity(_frame(spark, _POINTS[:1]), objective) == 0.0

@@ -177,6 +177,58 @@ def test_farthest_first_distances_at_pick_time():
     assert sorted(V.farthest_first(X[:3], 10)[0]) == [0, 1, 2]
 
 
+def _columns_fold(points, c):
+    return V.fold_sq_l2_columns(V.columns(points), c).tolist()
+
+
+def test_column_fold_bit_identical_to_python_fold():
+    """The numpy column fold is the Python fold per point, on the
+    cancellation rows and on float32-sourced vectors."""
+    rows = _rows()
+    for _, a, b in rows:
+        got = _columns_fold([a, b], b)
+        assert [_bits(x) for x in got] == [_bits(V.fold_sq_l2(a, b)), _bits(0.0)]
+    for d in (1, 3, 4, 64):
+        pts = [a for _, a, _ in rows if len(a) == d]
+        got = _columns_fold(pts, _LITS[d])
+        assert [_bits(x) for x in got] == [_bits(V.fold_sq_l2(a, _LITS[d])) for a in pts]
+    X = np.random.default_rng(13).normal(scale=1e3, size=(50, 32)).astype(np.float32)
+    X64 = X.astype(np.float64)
+    for c in (X64[0], X64[17]):
+        got = _columns_fold(X64, c)
+        assert [_bits(x) for x in got] == [_bits(V.fold_sq_l2(x, c)) for x in X.tolist()]
+
+
+def _traversal_inputs():
+    rng = np.random.default_rng(17)
+    gauss = rng.normal(size=(300, 16))
+    dup = gauss.copy()
+    dup[50:60] = dup[3]  # duplicates of one point
+    dup[200:] = dup[:100]  # and of a hundred more
+    grid = rng.integers(-2, 3, size=(200, 3)).astype(np.float64)  # many exact ties
+    f32 = rng.normal(scale=1e4, size=(200, 8)).astype(np.float32).astype(np.float64)
+    return {"gauss": gauss, "dup": dup, "grid": grid, "f32": f32}
+
+
+@pytest.mark.parametrize("name", sorted(_traversal_inputs()))
+def test_kernel_traversal_matches_vector_fold(name):
+    """kernel.farthest_first_clusters picks what vector.farthest_first
+    picks, and its distances are sqrt of the Python fold bit for bit."""
+    from diversity_maximization_spark.diversity import kernel as K
+
+    X = _traversal_inputs()[name]
+    k = 24
+    chosen, dist_when, min_dist, label = K.farthest_first_clusters(X, k)
+    want, d2 = V.farthest_first(X, k)
+    assert chosen.tolist() == want
+    assert [_bits(x) for x in dist_when] == [_bits(math.sqrt(x)) for x in d2]
+    rows = X.tolist()
+    folds = [[V.fold_sq_l2(x, rows[c]) for c in want] for x in rows]
+    assert [_bits(x) for x in min_dist] == [_bits(math.sqrt(min(f))) for f in folds]
+    # nearest center, ties to the earlier center
+    assert label.tolist() == [f.index(min(f)) for f in folds]
+
+
 # --- the driver boundary -----------------------------------------------------
 
 
